@@ -29,6 +29,8 @@ from __future__ import annotations
 import re
 import zlib
 
+from .page_join import join_parts, page_parts
+
 LINE_Y_TOL = 2.0
 COL_CLUSTER_TOL = 50.0
 COL_MIN_GAP = 200.0
@@ -270,8 +272,8 @@ def _tokenize(stream: bytes):
             yield ("op", m.group(0).decode("latin-1"))
 
 
-# fast-path scanner (round 5, the html_fast idiom applied to PDF): the
-# overwhelmingly common content-stream shape — BT, optional /Fn s Tf
+# fast-path scanner (round 5, html_extract's regex-scanner idiom applied
+# to PDF): the overwhelmingly common content-stream shape — BT, optional /Fn s Tf
 # size changes, `1 0 0 1 x y Tm` positioning, `<hex> Tj` shows, ET —
 # walks with ONE coarse regex per operator group instead of ~10 generic
 # token matches per span. Any byte the coarse grammar can't consume
@@ -468,10 +470,11 @@ def _cluster_lines(spans: list[tuple[float, float, float, str]]):
     return lines
 
 
-def _line_text(line: dict) -> str:
+def _line_text(line: list) -> str:
     """Join a line's spans in reading order — two-level bidi (round 6).
 
-    ``line["spans"]`` is x-ASCENDING by construction (_cluster_lines
+    ``line`` is a ``[y, size, spans]`` record; ``line[2]`` (its
+    ``(x, text)`` spans) is x-ASCENDING by construction (_cluster_lines
     sorts each baseline group by x before splitting runs). Ordering is
     the UAX#9-shaped two-level rule:
 
@@ -605,21 +608,10 @@ def extract_pdf_pages(payload: bytes) -> list[str]:
 def extract_pdf(payload: bytes) -> tuple[str, list[tuple[int, int, str]], int]:
     """Extract ``(text, spans, n_pages)`` from PDF bytes.
 
-    Page texts are joined with ``"\\n\\n"`` then stripped — the reference
-    page-join contract (``ocr_common.py:341-344``). Spans are
+    Page texts go through the shared page-join
+    (:func:`page_join.join_parts`, ``ocr_common.py:341-344``). Spans are
     ``(start, end, kind)`` offsets of each page in the final text.
     """
     pages = extract_pdf_pages(payload)
-    parts: list[str] = []
-    spans: list[tuple[int, int, str]] = []
-    pos = 0
-    for i, page_text in enumerate(pages):
-        t = page_text.strip()
-        if not t:
-            continue
-        if parts:
-            pos += 2
-        spans.append((pos, pos + len(t), f"page_{i + 1}"))
-        pos += len(t)
-        parts.append(t)
-    return "\n\n".join(parts).strip(), spans, len(pages)
+    text, spans = join_parts(page_parts(pages))
+    return text, spans, len(pages)

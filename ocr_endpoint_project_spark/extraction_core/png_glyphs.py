@@ -14,10 +14,10 @@ matches each cell against ALL templates by Hamming distance — classical
 template-match OCR, tolerant to per-glyph pixel noise up to half the
 font's min distance. RTL text renders in LOGICAL codepoint order (cell k
 = codepoint k), the same convention the PDF span path uses, so OCR output
-is byte-identical to the source text without a bidi pass. Unlike the framed-byte
-scan channel (png_pixels), nothing here inverts an encoding: a noisy
-glyph still decodes to its NEAREST template, which is what makes this
-recognition rather than deserialization.
+is byte-identical to the source text without a bidi pass. Nothing here
+inverts an encoding: a noisy glyph still decodes to its NEAREST
+template, which is what makes this recognition rather than
+deserialization.
 
 Composes with the real raster codec: render_glyph_png / ocr_glyph_png
 round-trip text through an actual compressed, scanline-filtered PNG.

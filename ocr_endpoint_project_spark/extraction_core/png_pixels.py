@@ -1,26 +1,15 @@
 """Real PNG raster codec (pure stdlib zlib + numpy): chunk walk, IDAT
-inflate, scanline (un)filtering for ALL five PNG filter types, and the
-page-framing scheme the synthetic scan corpus stores its text in.
+inflate, scanline (un)filtering for ALL five PNG filter types, and
+nearest-neighbor resampling.
 
-What is real here: everything rasters do — signature/chunk/CRC layout,
-IHDR validation, IDAT decompression, per-row filter encode/decode
-(None / Sub / Up / Average / Paeth, PNG spec §4.5.4), row segmentation,
-and resampling. What remains a deterministic stand-in: the pixel→text
-step itself. This environment has no OCR model or rasterizer, so scan
-pages carry their UTF-8 text as pixel VALUES (framed rows, below)
-rather than as glyph shapes; a deployment swaps
-:func:`pages_from_pixels` for a model call over the same decoded
-array. This replaces the previous iTXt-metadata stand-in — text now
-round-trips through the actual IDAT raster path.
-
-Page framing (8-bit grayscale): each page is one MARKER row —
-pixel[0] = 0xFF, pixels[1:5] = big-endian byte length of the page's
-UTF-8 payload, pixels[5:] = 0xFF — followed by ceil(len / width) data
-rows of raw payload bytes, zero-padded. Encoding cycles row filters
-None → Sub → Up so both directions of the vectorizable filters are
-exercised on every image (Average/Paeth are decoded + unit-tested, but
-not emitted on the hot path: their inverse is sequential per pixel in
-pure Python, ~20× slower than the numpy forms).
+Everything rasters do is real here: signature/chunk/CRC layout, IHDR
+validation, IDAT decompression, per-row filter encode/decode (None /
+Sub / Up / Average / Paeth, PNG spec §4.5.4) and 1- and 8-bit grayscale
+depths. The encoder cycles row filters None → Sub → Up so both
+directions of the vectorizable filters are exercised (Average/Paeth are
+decoded + unit-tested, but not emitted: their inverse is sequential per
+pixel in pure Python, ~20× slower than the numpy forms). Scan text is
+recognized from the decoded raster by ``png_glyphs``.
 """
 
 from __future__ import annotations
@@ -212,44 +201,6 @@ def decode_png_gray(payload: bytes) -> np.ndarray:
     if depth == 1:
         return np.unpackbits(out, axis=1)[:, :w] * np.uint8(255)
     return out
-
-
-# ---------------------------------------------------------------------------
-# page framing over the raster
-# ---------------------------------------------------------------------------
-
-def pixels_from_pages(page_texts: list[str], width: int = 612) -> np.ndarray:
-    rows: list[np.ndarray] = []
-    for text in page_texts:
-        data = text.encode("utf-8")
-        marker = np.full(width, 0xFF, dtype=np.uint8)
-        marker[1:5] = np.frombuffer(struct.pack(">I", len(data)), dtype=np.uint8)
-        rows.append(marker)
-        n_rows = max(1, -(-len(data) // width))
-        padded = data.ljust(n_rows * width, b"\x00")
-        rows.extend(np.frombuffer(padded, dtype=np.uint8).reshape(n_rows, width))
-    if not rows:  # zero-page scan: one blank row keeps the PNG valid
-        rows.append(np.zeros(width, dtype=np.uint8))
-    return np.stack(rows)
-
-
-def pages_from_pixels(pixels: np.ndarray) -> list[str]:
-    """Invert :func:`pixels_from_pages` (the deterministic 'OCR' step)."""
-    pages: list[str] = []
-    h, width = pixels.shape
-    # vectorized marker detection: one pass instead of a per-row .all()
-    is_marker = (pixels[:, 0] == 0xFF) & (pixels[:, 5:] == 0xFF).all(axis=1)
-    r = 0
-    while r < h:
-        if is_marker[r]:
-            (length,) = struct.unpack(">I", pixels[r, 1:5].tobytes())
-            n_rows = max(1, -(-length // width))
-            body = pixels[r + 1 : r + 1 + n_rows].tobytes()[:length]
-            pages.append(body.decode("utf-8", "replace"))
-            r += 1 + n_rows
-        else:
-            r += 1
-    return pages
 
 
 def resize_gray(pixels: np.ndarray, width: int, height: int) -> np.ndarray:

@@ -1,56 +1,33 @@
-"""The scan-PNG path: real raster in, deterministic OCR out.
+"""Scan images (PNG and JPEG): glyph-raster encode, decode and OCR.
 
 The reference OCRs scanned pages via a remote API, one image per page
-(``ocr_common.py:431-468``). This sandbox has neither an OCR model nor
-a rasterizer, so the pixel->TEXT step is deterministic: page text rides
-the raster as pixel VALUES in a framed row layout. Everything an image
-pipeline does around that step is REAL as of round 4 — signature/chunk/
-CRC walk, IHDR validation, IDAT inflate, scanline unfiltering for all
-five PNG filter types, row segmentation (``png_pixels.py``) — so scan
-payloads genuinely round-trip through the compressed raster, not
-through metadata. A real deployment swaps
-:func:`png_pixels.pages_from_pixels` for an OCR model call over the
-same decoded array. Legacy payloads whose text lives in ``iTXt``
-chunks (pre-round-4 caches) still decode via the metadata fallback.
+(``ocr_common.py:431-468``). Here the pixel->text step is a local,
+deterministic template-match OCR (``png_glyphs.py``) over a real decoded
+raster: signature/chunk/CRC walk, IHDR validation, IDAT inflate and
+scanline unfiltering (``png_pixels.py``), or baseline DCT decode
+(``jpeg_pixels.py``). A deployment with an OCR model swaps
+:func:`png_glyphs.ocr_pages` for a model call over the same decoded
+array. Each page is one marker row carrying its pixel-row count,
+followed by the rendered glyph grid.
 """
 
 from __future__ import annotations
 
 import struct
-import zlib
 
-PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-OCR_KEYWORD = b"ocr_text"
+import numpy as np
 
-
-def _chunk(ctype: bytes, body: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(body))
-        + ctype
-        + body
-        + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-    )
-
-
-def make_png_scan(page_texts: list[str], width: int = 612, height: int = 792) -> bytes:
-    """Build a real grayscale PNG whose RASTER carries the page texts.
-
-    Pages are framed into pixel rows (``png_pixels.pixels_from_pages``),
-    rows are filter-encoded (cycling None/Sub/Up) and deflate-compressed
-    into IDAT. ``height`` is ignored — the raster is exactly as tall as
-    the framed pages (the parameter is kept for call-site stability).
-    """
-    from .png_pixels import encode_png_gray, pixels_from_pages
-
-    return encode_png_gray(pixels_from_pages(page_texts, width=width))
+from .jpeg_pixels import JPEG_MAGIC, decode_jpeg_gray, encode_jpeg_gray
+from .page_join import join_parts, page_parts
+from .png_pixels import PNG_MAGIC, decode_png_gray, encode_png_bilevel
 
 
 def glyph_scan_pixels(page_texts: list[str]):
     """Page texts -> one stacked 0/1 glyph-raster grid (marker row per
     page, then its rendered glyph rows) — the shared scan-image layout
     behind both the PNG and the JPEG scan containers."""
-    import numpy as np
-
+    # png_glyphs builds its font at import (~10 ms, ~2 MB): imported here
+    # and in _raster_pages so workers that never touch a scan skip it
     from .png_glyphs import render_text
 
     # marker rows need 4 sync bits + 32 length bits + all-ink tail
@@ -74,12 +51,10 @@ def glyph_scan_pixels(page_texts: list[str]):
 def make_png_glyph_scan(page_texts: list[str]) -> bytes:
     """Build a scan PNG whose pages are GLYPH RASTERS (png_glyphs font):
     extraction must actually RECOGNIZE the text (template-match OCR),
-    not read it back from a byte channel. Each page = one 0xFE marker
-    row carrying its pixel-row count, then the rendered glyph grid. All
+    not read it back from a byte channel. Each page = one marker row
+    carrying its pixel-row count, then the rendered glyph grid. All
     pages share one width (the longest line across pages), so no line
     ever wraps and the OCR round-trip is byte-exact."""
-    from .png_pixels import encode_png_bilevel
-
     # 1-bit grayscale: ink/paper needs one bit per pixel — 8x smaller
     # scan payloads, and the codec's depth-1 path is exercised for real
     return encode_png_bilevel(glyph_scan_pixels(page_texts))
@@ -92,8 +67,6 @@ def make_jpeg_glyph_scan(page_texts: list[str]) -> bytes:
     ``cv_api/main.py:38-40``). The codec is genuinely lossy; the
     ``Q_SCAN`` error bound guarantees the raster re-binarizes exactly,
     so recognition still round-trips byte-identically."""
-    from .jpeg_pixels import encode_jpeg_gray
-
     return encode_jpeg_gray(glyph_scan_pixels(page_texts) * 255)
 
 
@@ -102,129 +75,64 @@ def extract_jpeg_text(payload: bytes) -> tuple[str, list[tuple[int, int, str]], 
     decode to the luma raster, re-binarize at 127 (the ``Q_SCAN`` bound
     makes this exact for bilevel sources), then the same marker-row walk
     + glyph OCR as the PNG scan path."""
-    import numpy as np
-
-    from .jpeg_pixels import JPEG_MAGIC, decode_jpeg_gray
-
     if not payload.startswith(JPEG_MAGIC):
         raise ValueError("not a JPEG payload")
     px = decode_jpeg_gray(payload)
     bilevel = np.where(px > 127, np.uint8(255), np.uint8(0))
-    return _pages_to_result(_raster_pages(bilevel))
+    pages = _raster_pages(bilevel)
+    text, spans = join_parts(page_parts(pages))
+    return text, spans, len(pages)
 
 
 def _raster_pages(pixels) -> list[str]:
-    """Walk a decoded scan raster: 0xFF markers head framed-byte pages
-    (``png_pixels.pages_from_pixels`` layout), 0xFE markers head glyph
-    pages recognized by template-match OCR. Marker rows can never occur
-    inside page bodies: byte-page data rows are consumed by their
-    marker's row count, and glyph rows always contain zero spacing
-    columns (so they are never all-0xFF / all-0xFE)."""
+    """Walk a decoded scan raster: each marker row heads one glyph page,
+    and all pages are recognized by template-match OCR. Marker rows can
+    never occur inside page bodies: glyph rows always contain zero
+    spacing columns, so they never match the marker's all-ink tail."""
     from .png_glyphs import ocr_pages
 
-    import numpy as np
-
-    pages: list[str] = []
     h, width = pixels.shape
-    # vectorized marker detection: one pass over the whole raster
-    # instead of per-row numpy comparisons per scanline.
-    # byte-framed marker: 0xFF everywhere but the 4 length bytes.
-    is_byte_marker = (pixels[:, 0] == 0xFF) & (pixels[:, 5:] == 0xFF).all(axis=1)
-    # glyph marker (bilevel raster, values 0/255): sync 1,0,1,0 then 32
-    # length bits then all-ink tail — glyph body rows always contain
-    # zero spacing columns, so they can never match the all-ink tail.
-    is_glyph_marker = (
+    if width < 37:
+        return []
+    # vectorized marker detection: one pass over the whole raster instead
+    # of per-row numpy comparisons. Marker (bilevel raster, values 0/255):
+    # sync 1,0,1,0 then 32 length bits then an all-ink tail.
+    is_marker = (
         (pixels[:, 0] == 255)
         & (pixels[:, 1] == 0)
         & (pixels[:, 2] == 255)
         & (pixels[:, 3] == 0)
         & (pixels[:, 36:] == 255).all(axis=1)
-        if width >= 37
-        else np.zeros(h, dtype=bool)
     )
-    # glyph pages are collected and recognized in ONE batched match
-    # (ocr_pages) — per-page calls paid ~70 us of fixed numpy overhead
-    # each, dominating multi-page scan docs (round-5 profile)
-    glyph_slots: list[int] = []
-    glyph_grids: list = []
+    # pages are recognized in ONE batched match (ocr_pages) — per-page
+    # calls paid ~70 us of fixed numpy overhead each, dominating
+    # multi-page scan docs (round-5 profile)
+    grids: list = []
     r = 0
     while r < h:
-        if is_byte_marker[r]:
-            (length,) = struct.unpack(">I", pixels[r, 1:5].tobytes())
-            n_rows = max(1, -(-length // width))
-            body = pixels[r + 1 : r + 1 + n_rows].tobytes()[:length]
-            pages.append(body.decode("utf-8", "replace"))
-            r += 1 + n_rows
-        elif is_glyph_marker[r]:
+        if is_marker[r]:
             bits = (pixels[r, 4:36] > 127).astype(np.uint8)
             (n_rows,) = struct.unpack(">I", np.packbits(bits).tobytes())
-            glyph_slots.append(len(pages))
-            pages.append("")  # placeholder, filled after the batch match
-            glyph_grids.append(pixels[r + 1 : r + 1 + n_rows])
+            grids.append(pixels[r + 1 : r + 1 + n_rows])
             r += 1 + n_rows
         else:
             r += 1
-    if glyph_grids:
-        for slot, text in zip(glyph_slots, ocr_pages(glyph_grids)):
-            pages[slot] = text
-    return pages
+    return ocr_pages(grids) if grids else []
 
 
 def extract_png_text(payload: bytes) -> tuple[str, list[tuple[int, int, str]], int]:
-    """Extract ``(text, spans, n_pages)`` from a synthetic scan PNG.
+    """Extract ``(text, spans, n_pages)`` from a scan PNG: decode the
+    raster, OCR its glyph pages, then apply the shared page-join
+    contract (``"\\n\\n"`` join + strip, ``ocr_common.py:341-344``).
 
-    Walks PNG chunks, reads every ``iTXt``/``tEXt`` chunk keyed
-    ``ocr_text`` as one page, then applies the same page-join contract as
-    the other extractors (``"\\n\\n"`` join + strip, ``ocr_common.py:341-344``).
-    """
+    A PNG the raster codec rejects (no IHDR/IDAT, unsupported colour
+    type or depth) yields no pages, so the document becomes an empty-text
+    ``OCR_PROVIDER_ERROR`` row."""
     if not payload.startswith(PNG_MAGIC):
         raise ValueError("not a PNG payload")
-    pages: list[str] = []
-    # primary path: decode the raster and read the pages out of the
-    # pixels (round 4 — real IDAT/filter machinery; glyph pages go
-    # through template-match OCR, byte-framed pages through the
-    # deterministic channel)
     try:
-        from .png_pixels import decode_png_gray
-
         pages = _raster_pages(decode_png_gray(payload))
     except ValueError:
-        pages = []  # not a raster scan: fall through to metadata
-    if pages:
-        return _pages_to_result(pages)
-    i = len(PNG_MAGIC)
-    n = len(payload)
-    while i + 8 <= n:
-        (length,) = struct.unpack(">I", payload[i : i + 4])
-        ctype = payload[i + 4 : i + 8]
-        body = payload[i + 8 : i + 8 + length]
-        if ctype == b"iTXt" and body.startswith(OCR_KEYWORD + b"\x00"):
-            # keyword NUL compression-flag compression-method NUL lang NUL translated NUL text
-            rest = body[len(OCR_KEYWORD) + 1 :]
-            # skip: compression flag + method, then two NUL-terminated fields
-            rest = rest[2:]
-            rest = rest.split(b"\x00", 2)[-1]
-            pages.append(rest.decode("utf-8", "replace"))
-        elif ctype == b"tEXt" and body.startswith(OCR_KEYWORD + b"\x00"):
-            pages.append(body[len(OCR_KEYWORD) + 1 :].decode("latin-1"))
-        if ctype == b"IEND":
-            break
-        i += 12 + length  # length + type + body + crc
-    return _pages_to_result(pages)
-
-
-def _pages_to_result(pages: list[str]) -> tuple[str, list[tuple[int, int, str]], int]:
-    """Shared page-join contract (``"\\n\\n"`` join + strip + spans)."""
-    parts: list[str] = []
-    spans: list[tuple[int, int, str]] = []
-    pos = 0
-    for idx, page_text in enumerate(pages):
-        t = page_text.strip()
-        if not t:
-            continue
-        if parts:
-            pos += 2
-        spans.append((pos, pos + len(t), f"page_{idx + 1}"))
-        pos += len(t)
-        parts.append(t)
-    return "\n\n".join(parts).strip(), spans, len(pages)
+        pages = []
+    text, spans = join_parts(page_parts(pages))
+    return text, spans, len(pages)

@@ -4,7 +4,7 @@ Re-implements (from observed behavior, not copied code) the metric
 library at ``ocr_common.py:111-201``:
 
 * ``normalize_words``  — ``ocr_common.py:111-115``
-* ``edit_distance``    — ``ocr_common.py:118-133`` (here: numpy two-row DP)
+* ``edit_distance``    — ``ocr_common.py:118-133`` (here: Myers bit-parallel)
 * ``cer`` / ``wer``    — ``ocr_common.py:136-149``
 * ``layout_accuracy``  — ``ocr_common.py:152-170``
 * ``word_metrics``     — ``ocr_common.py:173-201``
@@ -18,8 +18,6 @@ for parity tests and for the token-level WER path Spark has no builtin for.
 from __future__ import annotations
 
 import re
-
-import numpy as np
 
 _NORM_RE = re.compile(r"[^\w\s]")
 
@@ -39,8 +37,8 @@ def edit_distance(ref: list | str, hyp: list | str) -> int:
     column is a pair of bit-vectors carried in arbitrary-precision ints,
     one big-int step per reference symbol — O(R * H/64) word ops instead
     of the numpy two-row DP's O(R) vectorized rows (~3x on the corpus'
-    ~350-char documents; the DP remains below as the parity reference,
-    exhaustively cross-checked in tests/test_text_metrics.py).
+    ~350-char documents; the DP is kept as the parity reference in
+    tests/test_text_metrics.py).
     """
     r_len, h_len = len(ref), len(hyp)
     if r_len == 0:
@@ -74,45 +72,6 @@ def edit_distance(ref: list | str, hyp: list | str) -> int:
         pv = (mh << 1) | (full & ~(xv | ph))
         mv = ph & xv
     return score
-
-
-def edit_distance_dp(ref: list | str, hyp: list | str) -> int:
-    """numpy two-row DP (O(R*H) time, O(H) memory) — the pre-round-8
-    implementation, kept as the independent parity reference for
-    :func:`edit_distance`."""
-    r_len, h_len = len(ref), len(hyp)
-    if r_len == 0:
-        return h_len
-    if h_len == 0:
-        return r_len
-    # map both sequences to native integer codes so the inner compare is a
-    # C-speed int comparison (object-dtype string compares are ~20x slower
-    # and unreliable for strings containing NUL bytes)
-    if isinstance(ref, str) and isinstance(hyp, str):
-        ref_c = np.frombuffer(ref.encode("utf-32-le"), dtype=np.uint32)
-        hyp_c = np.frombuffer(hyp.encode("utf-32-le"), dtype=np.uint32)
-    else:
-        vocab: dict = {}
-        ref_c = np.fromiter(
-            (vocab.setdefault(t, len(vocab)) for t in ref), dtype=np.int64, count=r_len
-        )
-        hyp_c = np.fromiter(
-            (vocab.setdefault(t, len(vocab)) for t in hyp), dtype=np.int64, count=h_len
-        )
-    idx = np.arange(1, h_len + 1, dtype=np.int64)
-    full = np.arange(h_len + 1, dtype=np.int64)
-    prev = full.copy()
-    buf = np.empty(h_len + 1, dtype=np.int64)
-    for i in range(1, r_len + 1):
-        cost = (hyp_c != ref_c[i - 1]).astype(np.int64)
-        best = np.minimum(prev[:-1] + cost, prev[1:] + 1)  # substitute / delete
-        # insertion recurrence cur[j] = min(best[j-1], cur[j-1]+1) is a
-        # prefix-min in (cur[j] - j) space — no inner Python loop
-        buf[0] = i
-        np.subtract(best, idx, out=buf[1:])
-        np.minimum.accumulate(buf, out=buf)
-        prev = buf + full
-    return int(prev[h_len])
 
 
 def cer(ground_truth: str | None, predicted: str | None) -> float:

@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
 from ..extraction_core.document import extract_document
-from ..extraction_core.json_recover import leaf_accuracy, recover_json, recover_json_str
+from ..extraction_core.json_recover import leaf_accuracy, recover_json_str
 from ..extraction_core.sections import section_record_json
 from ..extraction_core.text_metrics import word_metrics
 from ..schemas import WORD_METRICS_STRUCT
@@ -116,14 +116,6 @@ def token_wer_udf(gt: pd.Series, pred: pd.Series) -> pd.Series:
     return pd.Series([wer(g, p) for g, p in zip(gt, pred)], dtype="float64")
 
 
-@pandas_udf(T.DoubleType())
-def layout_accuracy_udf(gt: pd.Series, pred: pd.Series) -> pd.Series:
-    """Section-header containment score (ocr_common.py:152-170)."""
-    from ..extraction_core.text_metrics import layout_accuracy
-
-    return pd.Series([layout_accuracy(g, p) for g, p in zip(gt, pred)], dtype="float64")
-
-
 # ---------------------------------------------------------------------------
 # 3. tolerant-JSON recovery pre-pass (str -> canonical JSON str | null)
 # ---------------------------------------------------------------------------
@@ -131,12 +123,6 @@ def layout_accuracy_udf(gt: pd.Series, pred: pd.Series) -> pd.Series:
 @pandas_udf(T.StringType())
 def json_recover_udf(raw: pd.Series) -> pd.Series:
     return raw.map(recover_json_str)
-
-
-@pandas_udf(T.StringType())
-def json_recover_error_udf(raw: pd.Series) -> pd.Series:
-    """The error side of recovery (PARSING_JSON_INVALID taxonomy)."""
-    return raw.map(lambda s: recover_json(s)[1])
 
 
 # ---------------------------------------------------------------------------

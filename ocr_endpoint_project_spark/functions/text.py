@@ -24,8 +24,9 @@ def hoist(df: DataFrame, keep: list[str] | tuple[str, ...], **exprs: Column) -> 
     the corpus shingle pass (round-8 OPTIMIZATION_r08.md). A Generate
     node is a collapse boundary, so after the explode the columns are
     attributes evaluated exactly once per row. The one-element explode
-    itself is O(rows) and null-safe (``array(e)`` is ``[NULL]`` when the
-    expression is null, so no rows are dropped).
+    itself is O(rows) and drops no rows: ``struct(...)`` is never null
+    (only its fields can be), so ``array(struct(...))`` always holds one
+    non-null element and every input row yields exactly one output row.
     """
     packed = F.explode(F.array(F.struct(*[e.alias(n) for n, e in exprs.items()])))
     tmp = df.select(*keep, packed.alias("_hoisted"))
@@ -74,11 +75,6 @@ def shingle_hash32(shingle: Column) -> Column:
     in Spark (conv) and DuckDB (from_hex/strtol-style), unlike xxhash64
     whose seeds differ across engines."""
     return F.conv(F.substring(F.md5(shingle), 1, 7), 16, 10).cast("long")
-
-
-def minhash_value(h: Column, a: int, b: int, p: int = 2147483647) -> Column:
-    """One universal-hash permutation min-value input: (a*h + b) mod p."""
-    return (h * F.lit(a) + F.lit(b)) % F.lit(p)
 
 
 def stopword_hits(tokens: Column, stopwords: list[str]) -> Column:
@@ -131,7 +127,3 @@ def sql_r4(x: str) -> str:
 def cents(c: Column, scale: int = 100) -> Column:
     """x -> integer-valued double floor(x*scale + 0.5) (same in DuckDB)."""
     return F.floor(c * F.lit(float(scale)) + F.lit(0.5))
-
-
-def sql_cents(x: str, scale: int = 100) -> str:
-    return f"floor(({x}) * {scale} + 0.5)"

@@ -491,15 +491,12 @@ def _dot(a, b):
     )
 
 
-def cosine_expr(a, b):
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
-
-
 def vec_norm(col):
     """Euclidean norm of a vector column — computed ONCE per vector in
     the per-side projection so every pair join pays one dot, not three.
     sqrt/mul/div are each correctly-rounded IEEE ops, so
-    dot/(norm_a*norm_b) is bit-identical to the inline cosine_expr."""
+    dot/(norm_a*norm_b) is bit-identical to the inline
+    dot/(sqrt(dot(a, a)) * sqrt(dot(b, b))) form."""
     return F.sqrt(_dot(col, col))
 
 

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ._io import read_spread
-from ..extraction_core.png_stub import PNG_MAGIC
+from ..extraction_core.png_pixels import PNG_MAGIC
 
 MEDIA_META = T.StructType(
     [

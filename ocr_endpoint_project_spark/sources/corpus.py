@@ -262,8 +262,7 @@ def render_png(blocks: list[tuple[str, str]]) -> tuple[bytes, str]:
     """Scan pages ALWAYS render as GLYPH RASTERS — extraction runs real
     template-match OCR over them (extraction_core/png_glyphs.py). Since
     round 5 the font covers ASCII + Latin-1 + Arabic, so every corpus
-    language (en/fr/ar) goes through recognition; the framed-byte channel
-    (make_png_scan) survives only as a decoder for legacy payloads."""
+    language (en/fr/ar) goes through recognition."""
     paragraphs = blocks_to_pdf_paragraphs(blocks)
     page_texts = ["\n".join(lines) for lines in paragraphs]
     golden = "\n\n".join(page_texts).strip()

@@ -319,14 +319,6 @@ class _HadoopSeekableFile:
         self.close()
 
 
-def _write_json(path: str, obj) -> None:
-    """Local-path JSON write (kept for the executor-side streaming sink,
-    which runs without a py4j gateway; IceTable routes through its IO)."""
-    _LocalIO().write_bytes(
-        path, json.dumps(obj, sort_keys=True).encode("utf-8")
-    )
-
-
 def _read_json(path: str):
     with open(path, encoding="utf-8") as f:
         return json.load(f)
@@ -1104,20 +1096,22 @@ class IceTable:
         # spelling (hdfs:/x relying on fs.defaultFS) — a raw relpath on
         # mismatched forms would see every live file as an orphan and
         # delete the whole table. A listed path outside the qualified
-        # table dir aborts cleanup instead of guessing.
-        base = self.io.qualify(self.table_dir).rstrip("/")
-        removed = 0
-        for p in list(self.io.list_files(self.data_dir)):
+        # table dir aborts cleanup instead of guessing — and every path is
+        # checked BEFORE the first delete, so an abort deletes nothing.
+        base = self.io.qualify(self.table_dir).rstrip("/") + "/"
+        orphans = []
+        for p in self.io.list_files(self.data_dir):
             q = self.io.qualify(p)
-            if not q.startswith(base + "/"):
+            if not q.startswith(base):
                 raise RuntimeError(
                     f"remove_orphan_files: listed path {p!r} is not under "
-                    f"table dir {base!r}; refusing cleanup"
+                    f"table dir {base[:-1]!r}; refusing cleanup"
                 )
-            if q[len(base) + 1 :] not in live:
-                self.io.delete(p)
-                removed += 1
-        return removed
+            if q[len(base) :] not in live:
+                orphans.append(p)
+        for p in orphans:
+            self.io.delete(p)
+        return len(orphans)
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """Drop history older than the newest ``keep_last`` snapshots,

@@ -8,6 +8,9 @@ invariant).
 
 from __future__ import annotations
 
+import struct
+import zlib
+
 import pytest
 
 from ocr_endpoint_project_spark.extraction_core import (
@@ -29,7 +32,8 @@ from ocr_endpoint_project_spark.extraction_core.pdf_write import (
     layout_paragraphs,
     make_pdf,
 )
-from ocr_endpoint_project_spark.extraction_core.png_stub import make_png_scan
+from ocr_endpoint_project_spark.extraction_core.png_pixels import PNG_MAGIC, _chunk
+from ocr_endpoint_project_spark.extraction_core.png_stub import make_png_glyph_scan
 from ocr_endpoint_project_spark.sources.corpus import generate_corpus
 
 
@@ -141,14 +145,72 @@ def test_pdf_multipage_join():
 
 
 # ---------------------------------------------------------------------------
-# PNG stub
+# scan PNG
 # ---------------------------------------------------------------------------
 def test_png_stub_roundtrip():
-    png = make_png_scan(["page one text\nwith a line", "page two text"])
+    png = make_png_glyph_scan(["page one text\nwith a line", "page two text"])
     text, spans, n_pages = extract_png_text(png)
     assert n_pages == 2
     assert text == "page one text\nwith a line\n\npage two text"
-    assert [s[2] for s in spans] == ["page_1", "page_2"]
+    assert spans == [(0, 25, "page_1"), (27, 40, "page_2")]
+
+
+def _png(ihdr: bytes, *chunks: tuple[bytes, bytes]) -> bytes:
+    body = b"".join(_chunk(t, b) for t, b in chunks)
+    return PNG_MAGIC + _chunk(b"IHDR", ihdr) + body + _chunk(b"IEND", b"")
+
+
+def _byte_framed_png() -> bytes:
+    """Pre-glyph scan layout: a 0xFF marker row holding the page's UTF-8
+    byte length, then the raw bytes as 8-bit pixel values."""
+    data = b"framed page text long enough"
+    width = 64
+    marker = bytearray(b"\xff" * width)
+    marker[1:5] = struct.pack(">I", len(data))
+    raw = b"\x00" + bytes(marker) + b"\x00" + data.ljust(width, b"\x00")
+    ihdr = struct.pack(">IIBBBBB", width, 2, 8, 0, 0, 0, 0)
+    return _png(ihdr, (b"IDAT", zlib.compress(raw)))
+
+
+def _itxt_only_png() -> bytes:
+    """Pre-raster scan layout: the page text in an ``ocr_text`` iTXt
+    chunk over a blank one-row raster."""
+    ihdr = struct.pack(">IIBBBBB", 8, 1, 8, 0, 0, 0, 0)
+    itxt = b"ocr_text\x00\x00\x00\x00\x00" + b"old page text"
+    return _png(ihdr, (b"iTXt", itxt), (b"IDAT", zlib.compress(b"\x00" + b"\x80" * 8)))
+
+
+def _color_type_2_png() -> bytes:
+    ihdr = struct.pack(">IIBBBBB", 2, 1, 8, 2, 0, 0, 0)
+    return _png(ihdr, (b"IDAT", zlib.compress(b"\x00" + b"\x80" * 6)))
+
+
+def _half_glyph_png() -> bytes:
+    png = make_png_glyph_scan(["a page cut off halfway through its raster"])
+    return png[: len(png) // 2]
+
+
+@pytest.mark.parametrize(
+    "build, error",
+    [
+        (_byte_framed_png, ERR_OCR_PROVIDER),
+        (_itxt_only_png, ERR_OCR_PROVIDER),
+        (lambda: PNG_MAGIC, ERR_OCR_PROVIDER),
+        (_color_type_2_png, ERR_OCR_PROVIDER),
+        (_half_glyph_png, "INTERNAL_ERROR: error: "),
+        (lambda: _png(b"\x00\x00\x01"), "INTERNAL_ERROR: error: "),
+    ],
+    ids=["byte_framed", "itxt_only", "magic_only", "color_type_2", "half_truncated", "ihdr_3_bytes"],
+)
+def test_unreadable_scan_pngs_are_typed_failure_rows(build, error):
+    """Scan text is read only from glyph rasters: the retired byte-framed
+    and iTXt payloads, and PNGs the codec rejects, become failed rows
+    with a typed error, never an exception."""
+    res = extract_document(build())
+    assert res.doc_kind == "image"
+    assert res.status == STATUS_FAILED
+    assert res.error.startswith(error)
+    assert (res.extracted_text, res.spans) == ("", [])
 
 
 # ---------------------------------------------------------------------------

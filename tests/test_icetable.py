@@ -475,6 +475,21 @@ def test_expire_crash_between_commit_and_cleanup(spark, tmp_path, monkeypatch):
     assert t.remove_orphan_files() == 0
 
 
+def test_orphan_cleanup_checks_every_path_before_deleting(tmp_path, monkeypatch):
+    """A foreign path anywhere in the listing aborts cleanup before ANY
+    delete — including orphans listed ahead of it."""
+    t = IceTable.create(str(tmp_path / "t"), partition_col="part", stat_cols=[])
+    orphan = os.path.join(t.data_dir, "part=0", "orphan.parquet")
+    os.makedirs(os.path.dirname(orphan), exist_ok=True)
+    with open(orphan, "wb") as f:
+        f.write(b"x")
+    foreign = str(tmp_path / "elsewhere" / "other.parquet")
+    monkeypatch.setattr(t.io, "list_files", lambda path: iter([orphan, foreign]))
+    with pytest.raises(RuntimeError, match="refusing cleanup"):
+        t.remove_orphan_files()
+    assert os.path.exists(orphan)
+
+
 def test_stage_data_unescapes_hive_partition_values(spark, tmp_path):
     """Spark %XX-escapes special chars in hive partition dirs; the
     manifest must record the UNescaped column value or string-partition

@@ -1,6 +1,6 @@
 """The real PNG raster codec: scanline filters (all five types, both
-directions), whole-image roundtrip, page framing, legacy-iTXt fallback,
-and the now-real grayscale resize."""
+directions), whole-image roundtrip, glyph OCR, and the now-real
+grayscale resize."""
 
 from __future__ import annotations
 
@@ -15,15 +15,8 @@ from ocr_endpoint_project_spark.extraction_core.png_pixels import (
     decode_png_gray,
     encode_png_gray,
     filter_row,
-    pages_from_pixels,
-    pixels_from_pages,
     resize_gray,
     unfilter_row,
-)
-from ocr_endpoint_project_spark.extraction_core.png_stub import (
-    OCR_KEYWORD,
-    extract_png_text,
-    make_png_scan,
 )
 
 
@@ -61,33 +54,6 @@ def test_encode_decode_roundtrip():
     rng = np.random.RandomState(11)
     pixels = rng.randint(0, 256, (9, 33)).astype(np.uint8)
     assert (decode_png_gray(encode_png_gray(pixels)) == pixels).all()
-
-
-def test_page_framing_roundtrip_unicode_and_multirow():
-    pages = ["short", "unicode: ✓ ناص é", "x" * 2000]  # 2000 > width
-    arr = pixels_from_pages(pages, width=612)
-    assert pages_from_pixels(arr) == pages
-
-
-def test_scan_text_rides_the_raster_not_metadata():
-    png = make_png_scan(["page one text\nwith a line", "page two text"])
-    assert OCR_KEYWORD not in png  # no iTXt carrier anymore
-    text, spans, n_pages = extract_png_text(png)
-    assert n_pages == 2
-    assert text == "page one text\nwith a line\n\npage two text"
-    assert [s[2] for s in spans] == ["page_1", "page_2"]
-
-
-def test_legacy_itxt_payloads_still_decode():
-    ihdr = struct.pack(">IIBBBBB", 8, 1, 8, 0, 0, 0, 0)
-    idat = zlib.compress(b"\x00" + b"\x80" * 8)
-    legacy = (
-        PNG_MAGIC + _chunk(b"IHDR", ihdr)
-        + _chunk(b"iTXt", OCR_KEYWORD + b"\x00\x00\x00\x00\x00" + "old page".encode())
-        + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
-    )
-    text, _spans, n_pages = extract_png_text(legacy)
-    assert (text, n_pages) == ("old page", 1)
 
 
 def test_resize_image_real_pixels():

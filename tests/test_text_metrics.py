@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -61,13 +62,47 @@ def test_edit_distance_properties(a, b):
 
 
 # -- Myers bit-parallel vs numpy DP parity (round-8 optimization) -----------
+def edit_distance_dp(ref: list | str, hyp: list | str) -> int:
+    """numpy two-row DP (O(R*H) time, O(H) memory) — the independent
+    parity reference for the bit-parallel :func:`edit_distance`."""
+    r_len, h_len = len(ref), len(hyp)
+    if r_len == 0:
+        return h_len
+    if h_len == 0:
+        return r_len
+    # map both sequences to native integer codes so the inner compare is a
+    # C-speed int comparison (object-dtype string compares are ~20x slower
+    # and unreliable for strings containing NUL bytes)
+    if isinstance(ref, str) and isinstance(hyp, str):
+        ref_c = np.frombuffer(ref.encode("utf-32-le"), dtype=np.uint32)
+        hyp_c = np.frombuffer(hyp.encode("utf-32-le"), dtype=np.uint32)
+    else:
+        vocab: dict = {}
+        ref_c = np.fromiter(
+            (vocab.setdefault(t, len(vocab)) for t in ref), dtype=np.int64, count=r_len
+        )
+        hyp_c = np.fromiter(
+            (vocab.setdefault(t, len(vocab)) for t in hyp), dtype=np.int64, count=h_len
+        )
+    idx = np.arange(1, h_len + 1, dtype=np.int64)
+    full = np.arange(h_len + 1, dtype=np.int64)
+    prev = full.copy()
+    buf = np.empty(h_len + 1, dtype=np.int64)
+    for i in range(1, r_len + 1):
+        cost = (hyp_c != ref_c[i - 1]).astype(np.int64)
+        best = np.minimum(prev[:-1] + cost, prev[1:] + 1)  # substitute / delete
+        # insertion recurrence cur[j] = min(best[j-1], cur[j-1]+1) is a
+        # prefix-min in (cur[j] - j) space — no inner Python loop
+        buf[0] = i
+        np.subtract(best, idx, out=buf[1:])
+        np.minimum.accumulate(buf, out=buf)
+        prev = buf + full
+    return int(prev[h_len])
+
+
 @settings(max_examples=200, deadline=None)
 @given(st.text(max_size=200), st.text(max_size=200))
 def test_edit_distance_myers_matches_dp(a, b):
-    from ocr_endpoint_project_spark.extraction_core.text_metrics import (
-        edit_distance_dp,
-    )
-
     assert edit_distance(a, b) == edit_distance_dp(a, b)
 
 
@@ -77,19 +112,11 @@ def test_edit_distance_myers_matches_dp(a, b):
     st.lists(st.sampled_from(["foo", "bar", "baz", "قطة", ""]), max_size=80),
 )
 def test_edit_distance_myers_matches_dp_tokens(ta, tb):
-    from ocr_endpoint_project_spark.extraction_core.text_metrics import (
-        edit_distance_dp,
-    )
-
     assert edit_distance(ta, tb) == edit_distance_dp(ta, tb)
 
 
 def test_edit_distance_multiword_bitvectors():
     # > 64 symbols exercises the multi-limb big-int path
-    from ocr_endpoint_project_spark.extraction_core.text_metrics import (
-        edit_distance_dp,
-    )
-
     a = ("abcdef" * 60)[:350]
     b = ("abdcef" * 60)[:333]
     assert edit_distance(a, b) == edit_distance_dp(a, b)
