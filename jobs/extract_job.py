@@ -9,11 +9,16 @@ Usage (cluster or local):
         --partitions 4096 \\
         --run-id run-2026-08-16
 
+Results land in the icetable ``{output}/extracted_ice``: one overwrite
+snapshot per run, with the run's lineage in the snapshot summary, plus a
+per-partition lineage audit mirror at ``{output}/lineage``.
+
 The job is RESUMABLE: re-running with the same ``--output`` skips
-partitions whose lineage rows are already committed (exact checkpoint
-resume, pipeline/lineage.py). The async-job surface of the reference
-(``POST /v1/jobs`` + poll, ``cv_api/main.py:407-451``) maps to: submit
-this job, poll the lineage table at ``{output}/lineage``.
+partitions already live in the table's current snapshot (exact
+checkpoint resume, pipeline/lineage.py). The async-job surface of the
+reference (``POST /v1/jobs`` + poll, ``cv_api/main.py:407-451``) maps
+to: submit this job, poll ``job_progress(table_dir)`` with
+``table_dir = {output}/extracted_ice``.
 """
 
 from __future__ import annotations
@@ -29,26 +34,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     ap = argparse.ArgumentParser(description="distributed main-content extraction")
     ap.add_argument("--input", required=True, help="pages parquet directory")
-    ap.add_argument("--output", required=True, help="output root (extracted/ + lineage/)")
+    ap.add_argument("--output", required=True, help="output root (extracted_ice/ + lineage/)")
     ap.add_argument("--partitions", type=int, default=256)
     ap.add_argument("--run-id", default="run-1")
     ap.add_argument("--quarantine", action="store_true", help="validate + quarantine first")
-    ap.add_argument(
-        "--sink",
-        choices=("parquet", "ice"),
-        default="parquet",
-        help="results store: plain parquet dirs, or the icetable snapshot "
-        "layer (sources/icetable.py — one snapshot per run, time travel)",
-    )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
     from ocr_endpoint_project_spark.pipeline.ingest import validate_pages
-    from ocr_endpoint_project_spark.pipeline.lineage import (
-        run_with_lineage,
-        run_with_lineage_ice,
-    )
+    from ocr_endpoint_project_spark.pipeline.lineage import run_with_lineage_ice
 
     spark = SparkSession.builder.appName(f"extract-{args.run_id}").getOrCreate()
     # bounded Arrow batches regardless of how the session was configured
@@ -59,8 +54,7 @@ def main() -> None:
         pages, quarantined = validate_pages(pages)
         quarantined.write.mode("overwrite").parquet(os.path.join(args.output, "quarantine"))
 
-    runner = run_with_lineage_ice if args.sink == "ice" else run_with_lineage
-    stats = runner(
+    stats = run_with_lineage_ice(
         spark, pages, args.output, run_id=args.run_id, num_partitions=args.partitions
     )
     print(json.dumps(stats))

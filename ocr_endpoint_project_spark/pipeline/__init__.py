@@ -1,14 +1,14 @@
 """The flagship extraction pipeline: ingest -> salt/repartition ->
-Arrow extraction kernel -> extracted + lineage sinks, with checkpoint
-resume (SURVEY.md §3.3 / §7 spine)."""
+Arrow extraction kernel -> icetable results sink with lineage, with
+checkpoint resume (SURVEY.md §3.3 / §7 spine)."""
 
 from .extract import run_extraction, salted_pages
-from .lineage import lineage_rows, resume_filter, run_with_lineage
+from .lineage import job_progress, lineage_rows, run_with_lineage_ice
 
 __all__ = [
     "run_extraction",
     "salted_pages",
     "lineage_rows",
-    "resume_filter",
-    "run_with_lineage",
+    "job_progress",
+    "run_with_lineage_ice",
 ]

@@ -46,7 +46,7 @@ def salted_pages(
     round-6 partition_skew probe), while the raw key spreads binomially
     (~1.05x). Logical grouping for the file-per-partition sink is
     restored by a cheap blob-free re-cluster at write time
-    (lineage.run_with_lineage).
+    (lineage.run_with_lineage_ice).
     """
     if salt_buckets > 1:
         key = F.xxhash64(F.col("url"), F.pmod(F.xxhash64(F.col("warc_ts")), F.lit(salt_buckets)))

@@ -4,16 +4,17 @@ The reference's job state machine (``cv_api/main.py:223-301``: queued ->
 processing -> succeeded|failed, timings, lineage ids) becomes DATA: one
 lineage row per logical partition with doc/byte counts, an
 order-insensitive content checksum, and stage timestamps. Resume is a
-broadcast anti-join of the input against succeeded partition ids.
+broadcast anti-join of the input against committed partition ids.
 
-Exactly-once contract: extracted rows are written with dynamic partition
-overwrite keyed by ``partition_id`` (re-running a partition REPLACES its
-directory, never duplicates it); the lineage append is the commit point
-and happens only after the data write returns. The reference's
-append-only results + derived-latest-snapshot idiom
-(``pages/parallel_ocr_test.py:56-68`` + ``scripts/export_benchmark_results.py:47-56``)
-is preserved for the lineage table itself: re-runs append, readers take
-the newest row per partition_id.
+Exactly-once contract: extracted rows land in an icetable
+(``sources/icetable.py``) by dynamic partition overwrite keyed by
+``partition_id`` (re-running a partition REPLACES its files, never
+duplicates them), and each run's overwrite snapshot is the ONE commit
+point: data and the run's lineage summary publish in the same CAS.
+Resume and progress read the table's current snapshot — its live
+files — never its history or a side table. The per-partition lineage
+parquet appended after each commit is an audit mirror (checksums,
+timings); nothing reads it back.
 """
 
 from __future__ import annotations
@@ -21,9 +22,10 @@ from __future__ import annotations
 import os
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.icetable import IceTable
 from .extract import DEFAULT_PARTITIONS, run_extraction
 
 STATUS_SUCCEEDED = "succeeded"
@@ -44,8 +46,7 @@ def lineage_rows(
     data write (the reference records genuine per-stage timings,
     cv_api/main.py:246-256); ``finished_at`` is the lineage-commit time,
     so ``started_at < finished_at`` brackets the data write.
-    ``partitions_total`` records the run's configured partition count so
-    readers (job_progress) never have to guess the denominator.
+    ``partitions_total`` records the run's configured partition count.
     """
     started = (
         F.lit(started_at).cast("timestamp")
@@ -86,170 +87,74 @@ def lineage_rows(
     )
 
 
-def latest_lineage(lineage: DataFrame) -> DataFrame:
-    """Newest lineage row per partition (the reference's latest-snapshot
-    rule, ``scripts/export_benchmark_results.py:47-56``)."""
-    w = Window.partitionBy("partition_id").orderBy(
-        F.desc("finished_at"), F.desc("run_id")
-    )
-    return (
-        lineage.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+def _live_partitions(files: list[dict]) -> set[int]:
+    """Partition ids of a snapshot's live data files."""
+    return {int(e["partition"]) for e in files}
 
 
-def resume_filter(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
-    """Succeeded partition ids from a previous run, or None on first run.
+def ice_done_partitions(spark: SparkSession, table: IceTable) -> DataFrame | None:
+    """Succeeded partition ids, read from the table's CURRENT snapshot:
+    the partition values of its live files (``plan_files``), or None for
+    an empty table.
 
-    Only the missing-path case means "fresh run"; any other read failure
-    (permissions, corrupt footer) re-raises — silently discarding resume
-    state would reprocess every partition.
+    The sink writes one output row per input row, so every committed
+    partition has a live file and every live file's partition was
+    committed. Reading the live snapshot rather than the snapshot
+    history keeps the answer right after ``expire_snapshots`` and
+    ``compact``, and needs no side table — a crash between the commit
+    and any bookkeeping can never lose or double-count a partition.
     """
-    from pyspark.errors import AnalysisException
-
-    try:
-        lin = spark.read.parquet(lineage_dir)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None
-        raise
-    return (
-        latest_lineage(lin)
-        .filter(F.col("status") == STATUS_SUCCEEDED)
-        .select("partition_id")
-    )
+    done = sorted(_live_partitions(table.plan_files()))
+    if not done:
+        return None
+    return spark.createDataFrame([(p,) for p in done], "partition_id int")
 
 
-def run_with_lineage(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_dir: str,
-    run_id: str = "run-1",
-    num_partitions: int = DEFAULT_PARTITIONS,
-) -> dict:
-    """Execute (or resume) the extraction job with durable lineage.
-
-    Layout: ``{out_dir}/extracted`` (parquet, partitioned by partition_id,
-    dynamic overwrite) and ``{out_dir}/lineage`` (parquet, append-only).
-    Returns counters for the run.
-    """
-    extracted_dir = os.path.join(out_dir, "extracted")
-    lineage_dir = os.path.join(out_dir, "lineage")
-
-    done = resume_filter(spark, lineage_dir)
-    extracted = run_extraction(pages, num_partitions=num_partitions, done_partitions=done)
-
-    started_at = datetime.now(timezone.utc)  # before the data write
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        # re-cluster by the LOGICAL id so the dynamic-overwrite sink
-        # writes one file set per partition_id (extraction tasks are
-        # physically spread by the raw url hash for balance — see
-        # extract.salted_pages). Rows here are blob-free (html was
-        # projected away in the kernel), so this exchange moves ~10% of
-        # the input bytes; a write-stage exchange keyed on P distinct
-        # values is birthday-lumpy, which is acceptable for pure IO
-        # tasks but must never sit in front of the extraction kernel.
-        extracted.repartition(num_partitions, F.col("partition_id"))
-        .write.mode("overwrite")
-        .partitionBy("partition_id")
-        .parquet(extracted_dir)
-    )
-    # commit point: lineage appended only after the data write returned
-    done_rows = spark.read.parquet(extracted_dir)
-    if done is not None:
-        done_rows = done_rows.join(F.broadcast(done), "partition_id", "left_anti")
-    lin = lineage_rows(
-        done_rows, run_id, started_at=started_at, partitions_total=num_partitions
-    )
-    lin.write.mode("append").parquet(lineage_dir)
-
-    n_done = 0 if done is None else done.count()
-    lin_now = spark.read.parquet(lineage_dir)
-    return {
-        "run_id": run_id,
-        "resumed_partitions_skipped": n_done,
-        "partitions_total": latest_lineage(lin_now).count(),
-        "extracted_dir": extracted_dir,
-        "lineage_dir": lineage_dir,
-    }
-
-
-def job_progress(
-    spark: SparkSession, lineage_dir: str, num_partitions: int = DEFAULT_PARTITIONS
-) -> dict:
+def job_progress(table_dir: str, num_partitions: int = DEFAULT_PARTITIONS) -> dict:
     """Stage progress for a (possibly running or resumable) extraction job.
 
     The reference reports per-job stage percentages while processing
     (``cv_api/main.py:223-301``: preparing 5% -> ocr 35% -> llm 75% ->
     completed 100%). In a distributed job the honest progress unit is the
-    PARTITION: each succeeded partition has passed every stage, so
-    ``percent = succeeded_partitions / partitions_total`` — derived from
-    the same lineage table that drives checkpoint resume, never from
-    driver-side mutable state. The denominator is the most recent run's
-    recorded ``partitions_total`` (a resumed job may have been launched
-    with a different partition count than this caller assumes);
-    ``num_partitions`` is only the fallback for pre-upgrade lineage
-    tables whose rows carry a null total.
+    PARTITION: each committed partition has passed every stage, so
+    ``percent = partitions_done / partitions_total``, with
+    ``partitions_done`` the same live-partition set that drives resume
+    (:func:`ice_done_partitions`) and ``docs_done`` the row count of the
+    live files. Everything comes from table metadata — no Spark job.
+
+    The denominator is the ``partitions_total`` of the newest snapshot
+    summary that records one
+    (a resumed job may have been launched with a different partition
+    count than this caller assumes); ``num_partitions`` is the fallback
+    for a missing table or a history trimmed by ``expire_snapshots``.
 
     Returns ``{"stage", "percent", "partitions_done", "partitions_total",
     "docs_done"}``.
     """
-    done = resume_filter(spark, lineage_dir)
-    if done is None:
-        return {
-            "stage": "preparing",
-            "percent": 0.0,
-            "partitions_done": 0,
-            "partitions_total": num_partitions,
-            "docs_done": 0,
-        }
-    lin_all = spark.read.parquet(lineage_dir)
-    lin = latest_lineage(lin_all).filter(F.col("status") == STATUS_SUCCEEDED)
-    total = num_partitions
-    if "partitions_total" in lin_all.columns:
-        # denominator from the SAME latest-per-partition rows that supply
-        # the numerator — multiple runs (run_prefix streams) may share one
-        # lineage_dir, and the globally newest row could belong to a
-        # different job's run, skewing percent/stage (round-5 fix)
-        tot_row = (
-            lin.filter(F.col("partitions_total").isNotNull())
-            .orderBy(F.desc("finished_at"), F.desc("run_id"))
-            .select("partitions_total")
-            .first()
-        )
-        if tot_row is not None:
-            total = int(tot_row["partitions_total"])
-    row = lin.agg(
-        F.count(F.lit(1)).alias("p"), F.sum("doc_count").alias("docs")
-    ).collect()[0]
-    n_done = int(row["p"] or 0)
-    pct = round(min(100.0, 100.0 * n_done / total), 1)
+    try:
+        table = IceTable.load(table_dir)
+    except FileNotFoundError:
+        files, snapshots = [], []
+    else:
+        files, snapshots = table.plan_files(), table.snapshots()
+    n_done = len(_live_partitions(files))
+    total = next(
+        (
+            int(s["summary"]["partitions_total"])
+            for s in reversed(snapshots)
+            if "partitions_total" in s["summary"]
+        ),
+        num_partitions,
+    )
     return {
-        "stage": "completed" if n_done >= total else "extracting",
-        "percent": pct,
+        "stage": (
+            "completed" if n_done >= total else "extracting" if n_done else "preparing"
+        ),
+        "percent": round(min(100.0, 100.0 * n_done / total), 1),
         "partitions_done": n_done,
         "partitions_total": total,
-        "docs_done": int(row["docs"] or 0),
+        "docs_done": sum(e["rows"] for e in files),
     }
-
-
-def ice_done_partitions(spark: SparkSession, table) -> DataFrame | None:
-    """Succeeded partition ids straight from the table's SNAPSHOT LOG
-    (resume's source of truth since round 7): every overwrite snapshot
-    records the partitions it committed in ``replaced_partitions``, so
-    resume state needs no side table — a crash between commit and any
-    bookkeeping can never lose or double-count a partition."""
-    done: set[int] = set()
-    for s in table.snapshots():
-        for p in s["summary"].get("replaced_partitions", []):
-            done.add(int(p))
-    if not done:
-        return None
-    return spark.createDataFrame(
-        [(p,) for p in sorted(done)], "partition_id int"
-    )
 
 
 def run_with_lineage_ice(
@@ -259,25 +164,27 @@ def run_with_lineage_ice(
     run_id: str = "run-1",
     num_partitions: int = DEFAULT_PARTITIONS,
 ) -> dict:
-    """``run_with_lineage`` with the results sink on the icetable format
-    (north_rule: "writes extracted text plus span offsets back to
-    Iceberg").
+    """Execute (or resume) the extraction job into an icetable with
+    durable lineage (north_rule: "writes extracted text plus span offsets
+    back to Iceberg").
+
+    Layout: ``{out_dir}/extracted_ice`` (the icetable, partitioned by
+    ``partition_id``) and ``{out_dir}/lineage`` (parquet audit mirror,
+    append-only).
 
     Each run (or resumed slice of a run) commits ONE snapshot via
     dynamic partition overwrite, and the run's LINEAGE RIDES IN THE
     SNAPSHOT SUMMARY (run id, doc/ok/failed/byte counts, an
-    order-insensitive checksum-of-checksums, wall-clock bracket): data
-    and lineage commit ATOMICALLY in the same CAS — there is no window
-    where one exists without the other.  The flow is stage -> derive
-    lineage from the staged files (the kernel ran exactly once; the
-    staged parquet is blob-free) -> commit; a crash before the commit
-    leaves only unreferenced files.  Resume reads the snapshot log
-    (:func:`ice_done_partitions`), never a side table.  The per-partition
-    lineage parquet is still appended AFTER the commit as a derived
-    convenience mirror for ``job_progress`` — losing it loses nothing.
+    order-insensitive checksum-of-checksums, wall-clock bracket,
+    ``partitions_total``): data and lineage commit ATOMICALLY in the same
+    CAS — there is no window where one exists without the other.  The
+    flow is stage -> derive lineage from the staged files (the kernel ran
+    exactly once; the staged parquet is blob-free) -> commit; a crash
+    before the commit leaves only unreferenced files.  Resume skips the
+    partitions live in the current snapshot (:func:`ice_done_partitions`).
+    The per-partition lineage rows are appended AFTER the commit as an
+    audit mirror; nothing reads them back, so losing them loses nothing.
     """
-    from ..sources.icetable import IceTable
-
     table_dir = os.path.join(out_dir, "extracted_ice")
     lineage_dir = os.path.join(out_dir, "lineage")
     try:
@@ -292,7 +199,14 @@ def run_with_lineage_ice(
 
     started_at = datetime.now(timezone.utc)  # before the data write
     entries = table.stage_overwrite(
-        # blob-free re-cluster by the logical id (see run_with_lineage)
+        # re-cluster by the LOGICAL id so the overwrite writes one file
+        # set per partition_id (extraction tasks are physically spread by
+        # the raw url hash for balance — see extract.salted_pages). Rows
+        # here are blob-free (html was projected away in the kernel), so
+        # this exchange moves ~10% of the input bytes; a write-stage
+        # exchange keyed on P distinct values is birthday-lumpy, which is
+        # acceptable for pure IO tasks but must never sit in front of the
+        # extraction kernel.
         extracted.repartition(num_partitions, F.col("partition_id"))
     )
     lin = None
@@ -332,18 +246,16 @@ def run_with_lineage_ice(
         },
     )
     if lin is not None:
-        # derived mirror (see docstring) — written only after the commit
+        # audit mirror (see docstring) — written only after the commit
         lin.withColumn("snapshot_id", F.lit(int(snap["snapshot_id"]))).write.mode(
             "append"
         ).parquet(lineage_dir)
 
-    n_done = 0 if done is None else done.count()
-    done_now = ice_done_partitions(spark, table)
     return {
         "run_id": run_id,
         "snapshot_id": int(snap["snapshot_id"]),
-        "resumed_partitions_skipped": n_done,
-        "partitions_total": 0 if done_now is None else done_now.count(),
+        "resumed_partitions_skipped": 0 if done is None else done.count(),
+        "partitions_total": len(_live_partitions(table.plan_files())),
         "table_dir": table_dir,
         "lineage_dir": lineage_dir,
     }

@@ -606,16 +606,7 @@ class IceTable:
         meta0 = self.metadata()
         entries = self._stage_data(df, meta0, meta0["last_sequence"] + 1)
         self._pending_schema = df.schema.jsonValue()
-
-        def build(meta: dict, seq: int, token: str):
-            name = f"manifest-{seq}-{token}-0.json"
-            self._wj(os.path.join(self.meta_dir, name), entries)
-            parent = self._current_manifest_names(meta)
-            summary = self._manifest_summary(entries)
-            summary["added_files"] = summary.pop("files")
-            return parent + [{"name": name, **self._manifest_summary(entries)}], summary
-
-        return self._commit("append", build)
+        return self.commit_appended_entries(entries)
 
     def commit_appended_entries(
         self,
@@ -626,7 +617,7 @@ class IceTable:
         """Metadata-only append commit for data files ALREADY in place
         (the two-phase-commit path: executors write files and report
         manifest entries, the driver commits them here — used by the
-        streaming sink in ``icetable_source.py``).
+        streaming sink in ``icetable_source.py`` and by :meth:`append`).
 
         ``idempotency_key``: if a snapshot already carries this key in
         its summary the commit is skipped and that snapshot returned —

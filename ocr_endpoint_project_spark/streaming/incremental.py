@@ -16,27 +16,46 @@ code path to keep byte-identity guarantees in both modes.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..pipeline.extract import DEFAULT_PARTITIONS, run_extraction
 from ..schemas import PAGES_SCHEMA
+from ..sources.icetable import IceTable
 
 
 def stream_extract(
     spark: SparkSession,
     input_dir: str,
-    out_dir: str,
+    table_dir: str,
     checkpoint_dir: str,
     num_partitions: int = DEFAULT_PARTITIONS,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
-    """Start the incremental extraction stream (parquet in -> parquet out).
+    """Start the incremental extraction stream: page parquet files in,
+    ONE icetable snapshot per micro-batch out (``sources/icetable.py``).
 
     ``max_files_per_trigger`` bounds per-batch input (the streaming analog
     of the bounded Arrow batches) so a backlog of 10^6 files never turns
     into one giant micro-batch.
+
+    Exactly-once without relying on the file sink: the table is
+    partitioned by ``batch_id``, and each micro-batch lands as a dynamic
+    partition overwrite of ITS OWN batch_id — a crash after the table
+    commit but before the checkpoint advances replays the batch, and the
+    replay REPLACES the same partition instead of duplicating it (the
+    same replay contract as streaming/dedupe_stream.py's keeper output).
+    Every micro-batch stays time-travelable as a snapshot, so "what had
+    the stream extracted as of batch k" is one metadata read.
     """
+    try:
+        table = IceTable.load(table_dir)
+    except FileNotFoundError:
+        table = IceTable.create(
+            table_dir, partition_col="batch_id", stat_cols=["url", "doc_bytes"]
+        )
+
     reader = spark.readStream.schema(PAGES_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -44,9 +63,14 @@ def stream_extract(
 
     extracted = run_extraction(pages, num_partitions=num_partitions)
 
+    def _commit(batch_df, batch_id: int) -> None:
+        table.overwrite_partitions(
+            batch_df.withColumn("batch_id", F.lit(int(batch_id)).cast("long")),
+            extra_summary={"stream_batch_id": int(batch_id)},
+        )
+
     writer = (
-        extracted.writeStream.format("parquet")
-        .option("path", out_dir)
+        extracted.writeStream.foreachBatch(_commit)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
@@ -85,8 +109,9 @@ def stream_extract_with_callbacks(
     unique across different queries sharing one lineage_dir, so run ids
     never collide between queries. A micro-batch whose lineage run_id
     already exists is SKIPPED entirely (data + lineage + callback) — the
-    streaming twin of the batch path's ``resume_filter``, making
-    checkpoint replay of a committed batch idempotent. Replay caveat:
+    streaming twin of the batch path's resume (which skips partitions
+    already live in the results table), making checkpoint replay of a
+    committed batch idempotent. Replay caveat:
     the lineage row is the commit point, so a crash BETWEEN the data
     write and the lineage write re-runs the batch and re-appends its
     data parquet — the one at-least-once window a non-transactional
@@ -95,8 +120,6 @@ def stream_extract_with_callbacks(
     not raw output row counts.
     """
     import hashlib
-
-    from pyspark.sql import functions as F
 
     from ..pipeline.lineage import lineage_rows
 
@@ -190,61 +213,6 @@ def stream_extract_with_callbacks(
 
     writer = (
         extracted.writeStream.foreachBatch(_handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_extract_to_icetable(
-    spark: SparkSession,
-    input_dir: str,
-    table_dir: str,
-    checkpoint_dir: str,
-    num_partitions: int = DEFAULT_PARTITIONS,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Incremental extraction committing ONE icetable snapshot per
-    micro-batch (``sources/icetable.py``).
-
-    Exactly-once without relying on the file sink: the table is
-    partitioned by ``batch_id``, and each micro-batch lands as a dynamic
-    partition overwrite of ITS OWN batch_id — a crash after the table
-    commit but before the checkpoint advances replays the batch, and the
-    replay REPLACES the same partition instead of duplicating it (the
-    same replay contract as streaming/dedupe_stream.py's keeper output).
-    Every micro-batch stays time-travelable as a snapshot, so "what had
-    the stream extracted as of batch k" is one metadata read.
-    """
-    from pyspark.sql import functions as F
-
-    from ..sources.icetable import IceTable
-
-    try:
-        table = IceTable.load(table_dir)
-    except FileNotFoundError:
-        table = IceTable.create(
-            table_dir, partition_col="batch_id", stat_cols=["url", "doc_bytes"]
-        )
-
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    pages = reader.parquet(input_dir)
-
-    extracted = run_extraction(pages, num_partitions=num_partitions)
-
-    def _commit(batch_df, batch_id: int) -> None:
-        table.overwrite_partitions(
-            batch_df.withColumn("batch_id", F.lit(int(batch_id)).cast("long")),
-            extra_summary={"stream_batch_id": int(batch_id)},
-        )
-
-    writer = (
-        extracted.writeStream.foreachBatch(_commit)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )

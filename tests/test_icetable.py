@@ -42,6 +42,11 @@ def test_append_scan_roundtrip(spark, tmp_path):
     assert set(got.columns) == {"k", "v", "part"}
     assert got.agg(F.sum("k")).collect()[0][0] == sum(range(150))
     assert [s["operation"] for s in t.snapshots()] == ["append", "append"]
+    # an append snapshot's summary: exactly the added files' counts
+    s = t.snapshots()[-1]["summary"]
+    assert sorted(s) == ["added_files", "bytes", "partitions", "rows"]
+    assert s["partitions"] == ["0", "1", "2", "3"]
+    assert s["rows"] == 50 and s["added_files"] == 4 and s["bytes"] > 0
 
 
 def test_overwrite_partitions_and_time_travel(spark, tmp_path):
@@ -257,52 +262,6 @@ def test_lineage_ice_sink_resume_and_snapshots(spark, tmp_path):
     pages.unpersist()
 
 
-def test_stream_extract_to_icetable_batches(spark, tmp_path):
-    """Streaming sink: one snapshot per micro-batch, batch_id-partitioned,
-    and a replayed batch REPLACES its partition instead of duplicating."""
-    from pyspark.sql import functions as SF
-
-    from ocr_endpoint_project_spark.sources.pages import corpus_pages
-    from ocr_endpoint_project_spark.streaming.incremental import (
-        stream_extract_to_icetable,
-    )
-
-    in_dir = str(tmp_path / "in")
-    pages = corpus_pages(spark, n=30, seed=3).cache()
-    pages.filter(SF.col("url").isNotNull()).limit(15).repartition(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-    pages.subtract(spark.read.parquet(in_dir)).repartition(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-
-    q = stream_extract_to_icetable(
-        spark,
-        in_dir,
-        str(tmp_path / "table"),
-        str(tmp_path / "ckpt"),
-        num_partitions=4,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-
-    t = IceTable.load(str(tmp_path / "table"))
-    got = t.scan(spark)
-    assert got.count() == 30
-    batches = [s for s in t.snapshots() if "stream_batch_id" in s["summary"]]
-    assert len(batches) >= 2  # maxFilesPerTrigger=1 over >=2 input files
-    assert {"extracted_text", "batch_id"} <= set(got.columns)
-
-    # replay contract: re-committing batch 0's rows overwrites, never dups
-    b0 = got.filter(SF.col("batch_id") == 0)
-    n_b0 = b0.count()
-    assert n_b0 > 0
-    t.overwrite_partitions(b0, extra_summary={"stream_batch_id": 0})
-    assert t.scan(spark).count() == 30
-    assert t.scan(spark).filter(SF.col("batch_id") == 0).count() == n_b0
-    pages.unpersist()
-
-
 def test_merge_copy_on_write_upsert(spark, tmp_path):
     """MERGE: matched keys replaced, unmatched carried over, untouched
     partitions' data files reused verbatim (no rewrite)."""
@@ -508,12 +467,13 @@ def test_stage_data_unescapes_hive_partition_values(spark, tmp_path):
 
 def test_ice_sink_lineage_in_summary_and_log_resume(spark, tmp_path):
     """r6 VERDICT #6: lineage rides in the snapshot summary (atomic with
-    the data commit), and resume derives from the SNAPSHOT LOG — losing
-    the derived lineage parquet mirror loses nothing."""
+    the data commit), and resume and progress derive from the table's
+    current snapshot — losing the lineage parquet mirror loses nothing."""
     import shutil
 
     from ocr_endpoint_project_spark.pipeline.lineage import (
         ice_done_partitions,
+        job_progress,
         run_with_lineage_ice,
     )
     from ocr_endpoint_project_spark.sources.pages import corpus_pages
@@ -531,10 +491,14 @@ def test_ice_sink_lineage_in_summary_and_log_resume(spark, tmp_path):
     assert s["lineage"]["byte_count"] > 0
     assert len(s["lineage"]["checksum"]) == 32
     assert s["started_at"] < s["finished_at"]
-    # resume state comes from the snapshot log, not the parquet mirror
+    # resume and progress come from the table, not the parquet mirror
     shutil.rmtree(r1["lineage_dir"])
     done = ice_done_partitions(spark, table)
     assert done is not None and done.count() == 8
+    p = job_progress(r1["table_dir"])
+    assert p["stage"] == "completed" and p["percent"] == 100.0
+    assert p["partitions_done"] == 8 and p["partitions_total"] == 8
+    assert p["docs_done"] == 40
     r2 = run_with_lineage_ice(spark, pages, out, run_id="rB", num_partitions=8)
     assert r2["resumed_partitions_skipped"] == 8
     assert table.scan(spark).count() == 40
@@ -542,4 +506,25 @@ def test_ice_sink_lineage_in_summary_and_log_resume(spark, tmp_path):
     # its own lineage record
     s2 = table.snapshots()[-1]["summary"]
     assert s2["run_id"] == "rB" and s2["lineage"]["doc_count"] == 0
+    pages.unpersist()
+
+
+def test_ice_sink_resume_survives_snapshot_expiry(spark, tmp_path):
+    """Resume reads the current snapshot's live files, not the snapshot
+    history: after ``expire_snapshots`` trims the history of a finished
+    run, a rerun still skips every partition and commits no docs."""
+    from ocr_endpoint_project_spark.pipeline.lineage import run_with_lineage_ice
+    from ocr_endpoint_project_spark.sources.pages import corpus_pages
+
+    pages = corpus_pages(spark, n=40, seed=11).cache()
+    out = str(tmp_path / "job")
+    r1 = run_with_lineage_ice(spark, pages, out, run_id="rA", num_partitions=8)
+    table = IceTable.load(r1["table_dir"])
+    table.expire_snapshots(keep_last=1)
+
+    r2 = run_with_lineage_ice(spark, pages, out, run_id="rB", num_partitions=8)
+    assert r2["resumed_partitions_skipped"] == 8
+    s = table.snapshots()[-1]["summary"]
+    assert s["run_id"] == "rB" and s["lineage"]["doc_count"] == 0
+    assert table.scan(spark).count() == 40
     pages.unpersist()

@@ -10,10 +10,11 @@ import pytest
 from ocr_endpoint_project_spark.pipeline.extract import run_extraction, salted_pages
 from ocr_endpoint_project_spark.pipeline.ingest import validate_pages
 from ocr_endpoint_project_spark.pipeline.lineage import (
-    latest_lineage,
+    job_progress,
     lineage_rows,
-    run_with_lineage,
+    run_with_lineage_ice,
 )
+from ocr_endpoint_project_spark.sources.icetable import IceTable
 from ocr_endpoint_project_spark.sources.pages import corpus_pages, pages_from_documents
 
 N_CORPUS = 120
@@ -76,26 +77,27 @@ def test_lineage_and_resume(spark, pages, tmp_path):
     # the job on rows of partitions 0..7 only
     tagged = salted_pages(pages, num_partitions=16)
     subset = tagged.filter(F.col("partition_id") < 8).drop("partition_id")
-    r1 = run_with_lineage(spark, subset, out, run_id="run-1", num_partitions=16)
+    r1 = run_with_lineage_ice(spark, subset, out, run_id="run-1", num_partitions=16)
     assert r1["resumed_partitions_skipped"] == 0
-    lin1 = latest_lineage(spark.read.parquet(r1["lineage_dir"]))
-    done1 = {r["partition_id"] for r in lin1.select("partition_id").collect()}
+    table = IceTable.load(r1["table_dir"])
+    s1 = table.snapshots()[-1]["summary"]
+    done1 = {int(p) for p in s1["replaced_partitions"]}
     assert done1 and all(p < 8 for p in done1)
 
     # run 2: full input, resume — partitions from run 1 must be skipped
-    r2 = run_with_lineage(spark, pages, out, run_id="run-2", num_partitions=16)
+    r2 = run_with_lineage_ice(spark, pages, out, run_id="run-2", num_partitions=16)
     assert r2["resumed_partitions_skipped"] == len(done1)
 
     # exactly-once: final extracted data covers every url exactly once
-    final = spark.read.parquet(r1["extracted_dir"])
+    final = table.scan(spark)
     assert final.count() == N_CORPUS
     assert final.select("url").distinct().count() == N_CORPUS
-    # run-1 partitions were NOT reprocessed (their lineage still run-1)
-    lin2 = latest_lineage(spark.read.parquet(r2["lineage_dir"]))
-    runs = {r["partition_id"]: r["run_id"] for r in lin2.collect()}
-    assert all(runs[p] == "run-1" for p in done1)
+    # run-1 partitions were NOT reprocessed: run 2 replaced only others
+    s2 = table.snapshots()[-1]["summary"]
+    assert s2["run_id"] == "run-2"
+    assert not {int(p) for p in s2["replaced_partitions"]} & done1
     # lineage accounting: doc counts sum to corpus size
-    assert sum(r["doc_count"] for r in lin2.collect()) == N_CORPUS
+    assert s1["lineage"]["doc_count"] + s2["lineage"]["doc_count"] == N_CORPUS
 
     # SURVEY §5 property: resume(run A ∪ run B) ≡ one single-shot run,
     # content-wise per url (not just counts)
@@ -152,36 +154,35 @@ def test_pages_from_documents_byte_identity(spark):
 
 
 def test_job_progress_from_lineage(spark, pages, tmp_path):
-    """Progress percentages derive from the lineage table (the reference's
+    """Progress percentages derive from the results table (the reference's
     per-job progress reporting, cv_api/main.py:223-301, generalized to
-    partitions): 0% before any run, 100% after a full run, partial after
-    a partial run."""
-    from ocr_endpoint_project_spark.pipeline.lineage import (
-        job_progress,
-        run_with_lineage,
-    )
-
+    partitions): 0% before any run, 100% after a full run, partial for a
+    table holding only some partitions."""
     out = str(tmp_path / "job")
-    lineage_dir = out + "/lineage"
+    table_dir = out + "/extracted_ice"
 
-    p0 = job_progress(spark, lineage_dir, num_partitions=8)
+    p0 = job_progress(table_dir, num_partitions=8)
     assert p0["stage"] == "preparing" and p0["percent"] == 0.0
 
-    run_with_lineage(spark, pages, out, run_id="run-1", num_partitions=8)
-    p1 = job_progress(spark, lineage_dir, num_partitions=8)
+    run_with_lineage_ice(spark, pages, out, run_id="run-1", num_partitions=8)
+    sc = spark.sparkContext
+    sc.setJobGroup("job_progress", "progress reads table metadata only")
+    try:
+        p1 = job_progress(table_dir, num_partitions=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("job_progress") == []
     assert p1["stage"] == "completed" and p1["percent"] == 100.0
     assert p1["partitions_done"] == 8
     assert p1["docs_done"] == pages.count()
 
-    # a lineage table with only SOME partitions succeeded reads as partial
-    import pyspark.sql.functions as F
-
-    partial_dir = str(tmp_path / "partial_lineage")
-    spark.read.parquet(lineage_dir).filter(F.col("partition_id") < 4).write.parquet(
-        partial_dir
-    )
-    p2 = job_progress(spark, partial_dir, num_partitions=8)
+    # a table with only SOME partitions committed reads as partial
+    half = IceTable.load(table_dir).scan(spark).filter(F.col("partition_id") < 4)
+    partial_dir = str(tmp_path / "partial")
+    IceTable.create(partial_dir, partition_col="partition_id").overwrite_partitions(half)
+    p2 = job_progress(partial_dir, num_partitions=8)
     assert p2["stage"] == "extracting" and 0.0 < p2["percent"] < 100.0
+    assert p2["partitions_done"] == 4 and p2["docs_done"] == half.count()
 
 
 def test_lineage_stage_timestamps_real(spark, pages, tmp_path):
@@ -189,22 +190,26 @@ def test_lineage_stage_timestamps_real(spark, pages, tmp_path):
     lineage-commit time (the reference records genuine per-stage timings,
     cv_api/main.py:246-256) — so the pair brackets the write instead of
     being one vacuous double current_timestamp()."""
+    from datetime import datetime
+
     out = str(tmp_path / "job")
-    run_with_lineage(spark, pages, out, run_id="run-1", num_partitions=8)
-    rows = spark.read.parquet(out + "/lineage").collect()
+    res = run_with_lineage_ice(spark, pages, out, run_id="run-1", num_partitions=8)
+    rows = spark.read.parquet(res["lineage_dir"]).collect()
     assert rows and all(r["started_at"] < r["finished_at"] for r in rows)
+    s = IceTable.load(res["table_dir"]).snapshots()[-1]["summary"]
+    assert datetime.fromisoformat(s["started_at"]) < datetime.fromisoformat(
+        s["finished_at"]
+    )
 
 
 def test_job_progress_denominator_from_lineage(spark, pages, tmp_path):
     """A job launched with one partition count must report that count as
     the denominator even when the progress caller assumes a different
-    default — partitions_total rides the lineage rows themselves."""
-    from ocr_endpoint_project_spark.pipeline.lineage import job_progress
-
+    default — partitions_total rides the snapshot summary itself."""
     out = str(tmp_path / "job")
-    run_with_lineage(spark, pages, out, run_id="run-1", num_partitions=8)
-    # caller guesses 999 partitions; lineage knows the truth
-    p = job_progress(spark, out + "/lineage", num_partitions=999)
+    r = run_with_lineage_ice(spark, pages, out, run_id="run-1", num_partitions=8)
+    # caller guesses 999 partitions; the table knows the truth
+    p = job_progress(r["table_dir"], num_partitions=999)
     assert p["partitions_total"] == 8
     assert p["stage"] == "completed" and p["percent"] == 100.0
 
@@ -228,40 +233,3 @@ def test_canonicalize_url_separator_correct(spark):
     ).collect()
     for r in rows:
         assert r.canon == cases[r.url], (r.url, r.canon)
-
-
-def test_job_progress_denominator_scoped_to_counted_rows(spark, pages, tmp_path):
-    """Round 5: with multiple runs sharing one lineage_dir (run_prefix
-    streams), the globally newest lineage row must NOT supply the
-    denominator — partitions_total comes from the same latest-succeeded
-    rows that are being counted. A newer FAILED retry row carrying a
-    foreign partitions_total would otherwise skew percent and stage."""
-    from pyspark.sql import functions as F
-
-    from ocr_endpoint_project_spark.pipeline.lineage import job_progress
-
-    out = str(tmp_path / "job")
-    run_with_lineage(spark, pages, out, run_id="run-1", num_partitions=8)
-    lin_dir = out + "/lineage"
-    # a newer failed attempt for partition 0, from a run configured with
-    # a wildly different partition count
-    failed = (
-        spark.read.parquet(lin_dir)
-        .filter(F.col("partition_id") == 0)
-        .limit(1)
-        .select(
-            "partition_id",
-            F.lit("run-2").alias("run_id"),
-            "doc_count", "ok_count", "failed_count", "byte_count", "checksum",
-            F.current_timestamp().alias("started_at"),
-            (F.current_timestamp() + F.expr("INTERVAL 1 HOUR")).alias("finished_at"),
-            F.lit(999).cast("int").alias("partitions_total"),
-            F.lit("failed").alias("status"),
-        )
-    )
-    failed.write.mode("append").parquet(lin_dir)
-
-    p = job_progress(spark, lin_dir, num_partitions=8)
-    assert p["partitions_total"] == 8  # not the foreign row's 999
-    assert p["partitions_done"] == 7  # partition 0's latest row is failed
-    assert p["stage"] == "extracting" and p["percent"] == 87.5

@@ -49,7 +49,9 @@ def test_spark_submit_extract_job(spark, tmp_path):
     stats2 = json.loads([l for l in res2.stdout.splitlines() if l.startswith("{")][-1])
     assert stats2["resumed_partitions_skipped"] == stats["partitions_total"]
 
-    out = spark.read.parquet(os.path.join(out_dir, "extracted"))
+    from ocr_endpoint_project_spark.sources.icetable import IceTable
+
+    out = IceTable.load(os.path.join(out_dir, "extracted_ice")).scan(spark)
     quarantined = spark.read.parquet(os.path.join(out_dir, "quarantine"))
     assert out.count() + quarantined.count() == 50
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from ocr_endpoint_project_spark.sources.icetable import IceTable
 from ocr_endpoint_project_spark.sources.pages import corpus_pages
 from ocr_endpoint_project_spark.streaming import stream_extract
 
@@ -14,8 +15,11 @@ def _await(q):
 
 
 def test_stream_extract_incremental(spark, tmp_path):
+    """Each restart commits only the new files, one icetable snapshot per
+    micro-batch, partitioned by batch_id; a replayed batch REPLACES its
+    partition instead of duplicating it."""
     in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
+    table_dir = str(tmp_path / "table")
     ckpt = str(tmp_path / "ckpt")
 
     all_pages = corpus_pages(spark, n=60, seed=42).cache()
@@ -24,16 +28,24 @@ def test_stream_extract_incremental(spark, tmp_path):
 
     # batch 1 arrives, stream drains it (availableNow) and stops
     batch1.write.mode("append").parquet(in_dir)
-    _await(stream_extract(spark, in_dir, out_dir, ckpt, num_partitions=8))
-    n1 = spark.read.parquet(out_dir).count()
+    _await(stream_extract(spark, in_dir, table_dir, ckpt, num_partitions=8))
+    table = IceTable.load(table_dir)
+    n1 = table.scan(spark).count()
     assert n1 == batch1.count()
 
-    # batch 2 arrives; restart processes ONLY the new files (checkpoint)
-    batch2.write.mode("append").parquet(in_dir)
-    _await(stream_extract(spark, in_dir, out_dir, ckpt, num_partitions=8))
-    out = spark.read.parquet(out_dir)
+    # batch 2 arrives as two files; restart processes ONLY the new files
+    # (checkpoint), one file per micro-batch
+    batch2.repartition(2).write.mode("append").parquet(in_dir)
+    _await(stream_extract(
+        spark, in_dir, table_dir, ckpt, num_partitions=8, max_files_per_trigger=1
+    ))
+    out = table.scan(spark)
     assert out.count() == 60
     assert out.select("url").distinct().count() == 60  # exactly-once
+    assert {"extracted_text", "batch_id"} <= set(out.columns)
+    batches = [s["summary"]["stream_batch_id"] for s in table.snapshots()]
+    assert batches == [0, 1, 2]  # one snapshot per micro-batch
+    assert out.filter(F.col("batch_id") == 0).count() == n1
 
     # byte identity holds through the streaming path
     golden = all_pages.select("url", F.col("text").alias("golden"))
@@ -41,8 +53,14 @@ def test_stream_extract_incremental(spark, tmp_path):
     assert j.filter(F.col("extracted_text") != F.col("golden")).count() == 0
 
     # a third restart with no new input is a no-op
-    _await(stream_extract(spark, in_dir, out_dir, ckpt, num_partitions=8))
-    assert spark.read.parquet(out_dir).count() == 60
+    _await(stream_extract(spark, in_dir, table_dir, ckpt, num_partitions=8))
+    assert table.scan(spark).count() == 60
+
+    # replay contract: re-committing batch 0's rows overwrites, never dups
+    b0 = table.scan(spark).filter(F.col("batch_id") == 0)
+    table.overwrite_partitions(b0, extra_summary={"stream_batch_id": 0})
+    assert table.scan(spark).count() == 60
+    assert table.scan(spark).filter(F.col("batch_id") == 0).count() == n1
     all_pages.unpersist()
 
 
@@ -188,15 +206,15 @@ def test_windowed_watermark_drops_late_data(spark, tmp_path):
 def test_streaming_lineage_matches_batch_schema(spark, tmp_path):
     """Streaming micro-batches emit the SAME lineage rows as the batch
     path — one audit table, one schema, across both execution modes."""
-    from ocr_endpoint_project_spark.pipeline.lineage import run_with_lineage
+    from ocr_endpoint_project_spark.pipeline.lineage import run_with_lineage_ice
     from ocr_endpoint_project_spark.streaming import stream_extract_with_callbacks
 
     pages = corpus_pages(spark, n=30, seed=3).cache()
 
-    # batch mode
+    # batch mode: the sink's lineage mirror, minus the snapshot it names
     batch_out = str(tmp_path / "batch")
-    run_with_lineage(spark, pages, batch_out, run_id="run-1", num_partitions=8)
-    batch_lin = spark.read.parquet(batch_out + "/lineage")
+    r = run_with_lineage_ice(spark, pages, batch_out, run_id="run-1", num_partitions=8)
+    batch_lin = spark.read.parquet(r["lineage_dir"]).drop("snapshot_id")
 
     # streaming mode over the same input
     in_dir = str(tmp_path / "in")
@@ -226,7 +244,7 @@ def test_streaming_lineage_replay_idempotent(spark, tmp_path):
     """A restarted query replaying an already-committed micro-batch must
     NOT double-append data or lineage: the run_id (stable checkpoint-hash
     prefix + batch id) is the commit marker, mirroring the batch path's
-    resume_filter."""
+    resume."""
     from ocr_endpoint_project_spark.streaming import stream_extract_with_callbacks
 
     pages = corpus_pages(spark, n=20, seed=7).cache()
