@@ -262,6 +262,48 @@ def test_lineage_ice_sink_resume_and_snapshots(spark, tmp_path):
     pages.unpersist()
 
 
+def test_stream_extract_to_icetable_batches(spark, tmp_path):
+    """Streaming sink: one snapshot per micro-batch, batch_id-partitioned,
+    and a replayed batch REPLACES its partition instead of duplicating."""
+    from ocr_endpoint_project_spark.sources.pages import corpus_pages
+    from ocr_endpoint_project_spark.streaming import stream_extract
+
+    in_dir = str(tmp_path / "in")
+    pages = corpus_pages(spark, n=30, seed=3).cache()
+    pages.filter(F.col("url").isNotNull()).limit(15).repartition(1).write.mode(
+        "append"
+    ).parquet(in_dir)
+    pages.subtract(spark.read.parquet(in_dir)).repartition(1).write.mode(
+        "append"
+    ).parquet(in_dir)
+
+    q = stream_extract(
+        spark,
+        in_dir,
+        str(tmp_path / "table"),
+        str(tmp_path / "ckpt"),
+        num_partitions=4,
+        max_files_per_trigger=1,
+    )
+    q.awaitTermination(120)
+
+    t = IceTable.load(str(tmp_path / "table"))
+    got = t.scan(spark)
+    assert got.count() == 30
+    batches = [s for s in t.snapshots() if "stream_batch_id" in s["summary"]]
+    assert len(batches) >= 2  # maxFilesPerTrigger=1 over >=2 input files
+    assert {"extracted_text", "batch_id"} <= set(got.columns)
+
+    # replay contract: re-committing batch 0's rows overwrites, never dups
+    b0 = got.filter(F.col("batch_id") == 0)
+    n_b0 = b0.count()
+    assert n_b0 > 0
+    t.overwrite_partitions(b0, extra_summary={"stream_batch_id": 0})
+    assert t.scan(spark).count() == 30
+    assert t.scan(spark).filter(F.col("batch_id") == 0).count() == n_b0
+    pages.unpersist()
+
+
 def test_merge_copy_on_write_upsert(spark, tmp_path):
     """MERGE: matched keys replaced, unmatched carried over, untouched
     partitions' data files reused verbatim (no rewrite)."""
