@@ -62,6 +62,7 @@ def lineage_rows(
                 "failed_count"
             ),
             F.sum(F.coalesce(F.col("doc_bytes"), F.lit(0))).alias("byte_count"),
+            F.sum(F.coalesce(F.col("cost_usd"), F.lit(0.0))).alias("cost_usd"),
             F.md5(
                 F.concat_ws(
                     "",
@@ -78,6 +79,7 @@ def lineage_rows(
             "ok_count",
             "failed_count",
             "byte_count",
+            "cost_usd",
             "checksum",
             started.alias("started_at"),
             F.current_timestamp().alias("finished_at"),
@@ -108,6 +110,55 @@ def ice_done_partitions(spark: SparkSession, table: IceTable) -> DataFrame | Non
     if not done:
         return None
     return spark.createDataFrame([(p,) for p in done], "partition_id int")
+
+
+def stage_lineage(
+    spark: SparkSession,
+    table: IceTable,
+    df: DataFrame,
+    run_id: str,
+    started_at: datetime,
+    partitions_total: int,
+) -> tuple[list[dict], DataFrame | None, dict]:
+    """Phase 1 of a results-sink commit: stage ``df`` into ``table``
+    (nothing is committed yet) and derive its lineage from the STAGED
+    files, so the producing plan — the extraction kernel — runs exactly
+    once, and the lineage reads blob-free parquet.
+
+    Returns ``(entries, lin, summary)``: the manifest entries for
+    ``IceTable.commit_overwrite``, the per-partition :func:`lineage_rows`
+    (None when nothing was staged) and their sum — doc/ok/failed/byte
+    counts, total cost and an order-insensitive checksum of the
+    per-partition checksums — from one collect.
+    """
+    entries = table.stage_overwrite(df)
+    summary = {
+        "doc_count": 0, "ok_count": 0, "failed_count": 0,
+        "byte_count": 0, "total_cost_usd": 0.0, "checksum": None,
+    }
+    if not entries:
+        return entries, None, summary
+    staged = spark.read.option("basePath", table.data_dir).parquet(
+        *[os.path.join(table.table_dir, e["path"]) for e in entries]
+    )
+    lin = lineage_rows(
+        staged, run_id, started_at=started_at, partitions_total=partitions_total
+    )
+    row = lin.agg(
+        F.sum("doc_count").alias("doc_count"),
+        F.sum("ok_count").alias("ok_count"),
+        F.sum("failed_count").alias("failed_count"),
+        F.sum("byte_count").alias("byte_count"),
+        F.sum("cost_usd").alias("total_cost_usd"),
+        F.md5(F.concat_ws("", F.sort_array(F.collect_list("checksum")))).alias(
+            "checksum"
+        ),
+    ).collect()[0]
+    # a staged-but-empty file set aggregates to NULLs
+    return entries, lin, {
+        k: row[k] if k == "checksum" else type(v)(row[k] or 0)
+        for k, v in summary.items()
+    }
 
 
 def job_progress(table_dir: str, num_partitions: int = DEFAULT_PARTITIONS) -> dict:
@@ -174,12 +225,12 @@ def run_with_lineage_ice(
 
     Each run (or resumed slice of a run) commits ONE snapshot via
     dynamic partition overwrite, and the run's LINEAGE RIDES IN THE
-    SNAPSHOT SUMMARY (run id, doc/ok/failed/byte counts, an
+    SNAPSHOT SUMMARY (run id, doc/ok/failed/byte counts, total cost, an
     order-insensitive checksum-of-checksums, wall-clock bracket,
     ``partitions_total``): data and lineage commit ATOMICALLY in the same
     CAS — there is no window where one exists without the other.  The
-    flow is stage -> derive lineage from the staged files (the kernel ran
-    exactly once; the staged parquet is blob-free) -> commit; a crash
+    flow is stage -> derive lineage from the staged files
+    (:func:`stage_lineage`, shared with the streaming sink) -> commit; a crash
     before the commit leaves only unreferenced files.  Resume skips the
     partitions live in the current snapshot (:func:`ice_done_partitions`).
     The per-partition lineage rows are appended AFTER the commit as an
@@ -198,7 +249,9 @@ def run_with_lineage_ice(
     extracted = run_extraction(pages, num_partitions=num_partitions, done_partitions=done)
 
     started_at = datetime.now(timezone.utc)  # before the data write
-    entries = table.stage_overwrite(
+    entries, lin, lineage_summary = stage_lineage(
+        spark,
+        table,
         # re-cluster by the LOGICAL id so the overwrite writes one file
         # set per partition_id (extraction tasks are physically spread by
         # the raw url hash for balance — see extract.salted_pages). Rows
@@ -207,34 +260,11 @@ def run_with_lineage_ice(
         # exchange keyed on P distinct values is birthday-lumpy, which is
         # acceptable for pure IO tasks but must never sit in front of the
         # extraction kernel.
-        extracted.repartition(num_partitions, F.col("partition_id"))
+        extracted.repartition(num_partitions, F.col("partition_id")),
+        run_id,
+        started_at,
+        num_partitions,
     )
-    lin = None
-    lineage_summary = {
-        "doc_count": 0, "ok_count": 0, "failed_count": 0,
-        "byte_count": 0, "checksum": None,
-    }
-    if entries:
-        staged = spark.read.option("basePath", table.data_dir).parquet(
-            *[os.path.join(table.table_dir, e["path"]) for e in entries]
-        )
-        lin = lineage_rows(
-            staged, run_id, started_at=started_at, partitions_total=num_partitions
-        )
-        row = lin.agg(
-            F.sum("doc_count").alias("doc_count"),
-            F.sum("ok_count").alias("ok_count"),
-            F.sum("failed_count").alias("failed_count"),
-            F.sum("byte_count").alias("byte_count"),
-            F.md5(
-                F.concat_ws("", F.sort_array(F.collect_list("checksum")))
-            ).alias("checksum"),
-        ).collect()[0]
-        lineage_summary = {
-            # a staged-but-empty file set aggregates to NULLs
-            k: (int(row[k] or 0) if k != "checksum" else row[k])
-            for k in lineage_summary
-        }
     snap = table.commit_overwrite(
         entries,
         extra_summary={

@@ -606,28 +606,6 @@ class IceTable:
         meta0 = self.metadata()
         entries = self._stage_data(df, meta0, meta0["last_sequence"] + 1)
         self._pending_schema = df.schema.jsonValue()
-        return self.commit_appended_entries(entries)
-
-    def commit_appended_entries(
-        self,
-        entries: list[dict],
-        extra_summary: dict | None = None,
-        idempotency_key: str | None = None,
-    ) -> dict:
-        """Metadata-only append commit for data files ALREADY in place
-        (the two-phase-commit path: executors write files and report
-        manifest entries, the driver commits them here — used by the
-        streaming sink in ``icetable_source.py`` and by :meth:`append`).
-
-        ``idempotency_key``: if a snapshot already carries this key in
-        its summary the commit is skipped and that snapshot returned —
-        a replayed micro-batch after a crash between table commit and
-        the engine's checkpoint ack commits exactly once.
-        """
-        if idempotency_key is not None:
-            for s in self.metadata()["snapshots"]:
-                if s["summary"].get("idempotency_key") == idempotency_key:
-                    return s
 
         def build(meta: dict, seq: int, token: str):
             name = f"manifest-{seq}-{token}-0.json"
@@ -635,10 +613,6 @@ class IceTable:
             parent = self._current_manifest_names(meta)
             summary = self._manifest_summary(entries)
             summary["added_files"] = summary.pop("files")
-            if extra_summary:
-                summary.update(extra_summary)
-            if idempotency_key is not None:
-                summary["idempotency_key"] = idempotency_key
             return parent + [{"name": name, **self._manifest_summary(entries)}], summary
 
         return self._commit("append", build)

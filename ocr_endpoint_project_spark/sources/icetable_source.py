@@ -36,9 +36,7 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
     InputPartition,
-    WriterCommitMessage,
 )
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -336,167 +334,6 @@ class IcetableStreamReader(DataSourceStreamReader):
         self._cap_base_known = True
 
 
-@dataclass
-class IceCommitMessage(WriterCommitMessage):
-    """Manifest entries for the files one task wrote (picklable)."""
-
-    entries: list
-
-
-class IcetableStreamWriter(DataSourceStreamWriter):
-    """Streaming SINK: each micro-batch becomes one icetable snapshot via
-    real two-phase commit — ``write`` runs per task, writes its rows as
-    immutable parquet files straight into the table's data layout and
-    returns their manifest entries; ``commit`` (driver) publishes all
-    entries as ONE append snapshot through the CAS metadata commit;
-    ``abort`` deletes the orphaned files.  A replayed batch (crash after
-    the table commit, before the engine checkpoints) is deduplicated by
-    an idempotency key in the snapshot summary: pass a stable
-    ``.option("runId", ...)`` for exactly-once across query restarts
-    (default: the latest-snapshot batch-id check, which covers the
-    single-query replay window).
-
-    Rows are grouped by the table's partition column inside the task, so
-    upstream should ``repartition(partition_col)`` for one file per
-    partition per batch (same contract as ``IceTable._stage_data``).
-    """
-
-    def __init__(self, schema: StructType, options):
-        self._schema = schema
-        self._table_dir = _local_path(options["path"])
-        # idempotency-key base, strongest first: an explicit runId, else
-        # the checkpoint location (stable across restarts of ONE query,
-        # distinct across fresh-checkpoint queries — exactly the replay
-        # identity we need; batchId alone collides because a new query's
-        # batch ids restart at 0)
-        self._run_id = str(
-            options.get("runid", "") or options.get("checkpointlocation", "")
-        )
-        meta = IceTable.load(self._table_dir).metadata()
-        self._pcol = meta["partition_col"]
-        self._stat_cols = meta["stat_cols"]
-
-    def write(self, iterator) -> IceCommitMessage:
-        import secrets
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from .icetable import _file_stats
-
-        token = secrets.token_hex(4)
-        data_fields = [f for f in self._schema.fields if f.name != self._pcol]
-        target = to_arrow_schema(StructType(data_fields))
-        by_part: dict = {}
-        for row in iterator:
-            d = row.asDict()
-            pv = None if self._pcol is None else d[self._pcol]
-            by_part.setdefault(pv, []).append(d)
-        data_dir = os.path.join(self._table_dir, "data")
-        entries = []
-        for pv, rows in by_part.items():
-            cols = {f.name: [r[f.name] for r in rows] for f in data_fields}
-            tbl = pa.Table.from_pydict(cols, schema=target)
-            # hive-style dir: escape the value like Spark's escapePathName
-            # does (the manifest keeps the UNescaped value; Spark's
-            # basePath reader unescapes %XX on read)
-            from urllib.parse import quote
-
-            ddir = (
-                data_dir
-                if pv is None
-                else os.path.join(data_dir, f"{self._pcol}={quote(str(pv), safe='')}")
-            )
-            os.makedirs(ddir, exist_ok=True)
-            path = os.path.join(ddir, f"stream-{token}-{len(entries)}.parquet")
-            pq.write_table(tbl, path)
-            entries.append(
-                {
-                    "path": os.path.relpath(path, self._table_dir),
-                    "partition": None if pv is None else str(pv),
-                    **_file_stats(path, self._stat_cols),
-                }
-            )
-        return IceCommitMessage(entries)
-
-    def _key(self, batch_id: int) -> str | None:
-        return f"{self._run_id}:{batch_id}" if self._run_id else None
-
-    @staticmethod
-    def _same_content(t: IceTable, snap: dict, entries: list) -> bool:
-        """Does ``snap``'s ADDED manifest hold the same (partition, rows)
-        multiset as this attempt's entries?  File paths can't match (each
-        attempt writes fresh random-token names), so content shape is the
-        strongest identity available without a key."""
-        from .icetable import _read_json
-
-        try:
-            mlist = _read_json(os.path.join(t.meta_dir, snap["manifest_list"]))
-            if not mlist:
-                return False
-            added = _read_json(os.path.join(t.meta_dir, mlist[-1]["name"]))
-        except (OSError, ValueError):
-            return False
-
-        def sig(es):
-            return sorted((e["partition"], e["rows"]) for e in es)
-
-        return sig(added) == sig(entries)
-
-    def commit(self, messages, batchId: int) -> None:
-        t = IceTable.load(self._table_dir)
-        entries = [e for m in messages if m is not None for e in m.entries]
-        if not entries:
-            return
-        key = self._key(batchId)
-        if key is None:
-            # last-resort replay guard (no runId AND no checkpoint
-            # location in options): the only batch Spark can replay is
-            # the one right after the last committed snapshot — but a
-            # matching batchId alone is NOT identity (a fresh-checkpoint
-            # query restarts at batch 0), so also require the replayed
-            # attempt's content to match what that snapshot committed
-            # before dropping the files
-            snaps = t.snapshots()
-            if (
-                snaps
-                and snaps[-1]["summary"].get("stream_batch_id") == batchId
-                and self._same_content(t, snaps[-1], entries)
-            ):
-                self._delete(entries)
-                return
-        # table schema follows the stream's schema (same rule as append())
-        t._pending_schema = StructType(
-            [f for f in self._schema.fields]
-        ).jsonValue()
-        before = t.metadata()["current_snapshot_id"]
-        snap = t.commit_appended_entries(
-            entries,
-            extra_summary={"stream_batch_id": batchId},
-            idempotency_key=key,
-        )
-        if key is not None and snap["snapshot_id"] != (before or 0) + 1:
-            # idempotent skip path returned an OLD snapshot: this batch
-            # was already committed — drop the replayed attempt's files
-            if snap["summary"].get("idempotency_key") == key and before == t.metadata()[
-                "current_snapshot_id"
-            ]:
-                self._delete(entries)
-
-    def abort(self, messages, batchId: int) -> None:
-        self._delete(
-            [e for m in messages if m is not None for e in m.entries]
-        )
-
-    def _delete(self, entries) -> None:
-        for e in entries:
-            try:
-                os.unlink(os.path.join(self._table_dir, e["path"]))
-            except OSError:
-                pass
-
-
 class IcetableDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -510,8 +347,3 @@ class IcetableDataSource(DataSource):
 
     def streamReader(self, schema: StructType) -> IcetableStreamReader:
         return IcetableStreamReader(schema, self.options)
-
-    def streamWriter(self, schema: StructType, overwrite: bool) -> IcetableStreamWriter:
-        if overwrite:
-            raise ValueError("icetable streaming sink is append-only")
-        return IcetableStreamWriter(schema, self.options)

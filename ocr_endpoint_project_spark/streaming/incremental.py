@@ -9,19 +9,30 @@ file — the streaming twin of the batch lineage/resume in
 stops, which is the "job" execution mode; leaving the trigger default
 gives a continuous service.
 
-The batch and streaming paths share ``run_extraction`` verbatim — one
-code path to keep byte-identity guarantees in both modes.
+The reference's completion webhook and progress callback
+(``cv_api/main.py:199-301``) become data: each micro-batch's job summary
+rides in the snapshot that commits its rows, and the optional
+driver-side ``callback_fn`` fires only after that commit.
+
+The batch and streaming paths share ``run_extraction`` and
+``stage_lineage`` verbatim — one code path to keep byte-identity and
+lineage guarantees in both modes.
 """
 
 from __future__ import annotations
+
+from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..pipeline.extract import DEFAULT_PARTITIONS, run_extraction
+from ..pipeline.lineage import stage_lineage
 from ..schemas import PAGES_SCHEMA
 from ..sources.icetable import IceTable
+
+BATCH_KEY = "batch_key"
 
 
 def stream_extract(
@@ -32,6 +43,7 @@ def stream_extract(
     num_partitions: int = DEFAULT_PARTITIONS,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
+    callback_fn=None,
 ) -> StreamingQuery:
     """Start the incremental extraction stream: page parquet files in,
     ONE icetable snapshot per micro-batch out (``sources/icetable.py``).
@@ -40,21 +52,34 @@ def stream_extract(
     of the bounded Arrow batches) so a backlog of 10^6 files never turns
     into one giant micro-batch.
 
-    Exactly-once without relying on the file sink: the table is
-    partitioned by ``batch_id``, and each micro-batch lands as a dynamic
-    partition overwrite of ITS OWN batch_id — a crash after the table
-    commit but before the checkpoint advances replays the batch, and the
-    replay REPLACES the same partition instead of duplicating it (the
-    same replay contract as streaming/dedupe_stream.py's keeper output).
-    Every micro-batch stays time-travelable as a snapshot, so "what had
-    the stream extracted as of batch k" is one metadata read.
+    Exactly-once without relying on the file sink: a batch is identified
+    by (query id, batch id). The table is partitioned by the string
+    ``batch_key = "{query id}-{batch id}"`` (``batch_id`` stays an
+    ordinary column), so queries with different checkpoints can share one
+    table — each one's batch ids restart at 0, but their keys never
+    collide. A batch whose key is already a live partition is skipped:
+    a crash after the table commit but before the checkpoint advances
+    replays the batch, and the replay stages, commits and calls back
+    nothing. Otherwise the batch is staged, its job summary is derived
+    from the staged files (``stage_lineage``, shared with the batch
+    sink) and both publish in one dynamic partition overwrite of its own
+    key.
+
+    The summary — ``batch_id``, ``query_id``, doc/ok/failed/byte counts,
+    ``total_cost_usd``, ``checksum``, ``status`` (``succeeded`` or
+    ``partial``) and ``docs_cumulative`` (this query's live rows,
+    read from table metadata) — lands as ``summary["lineage"]`` of the
+    snapshot, next to ``stream_batch_id``. ``callback_fn(summary)`` (the
+    reference's webhook POST slot) is called after the commit returns.
     """
     try:
         table = IceTable.load(table_dir)
     except FileNotFoundError:
         table = IceTable.create(
-            table_dir, partition_col="batch_id", stat_cols=["url", "doc_bytes"]
+            table_dir, partition_col=BATCH_KEY, stat_cols=["url", "doc_bytes"]
         )
+    if table.metadata()["partition_col"] != BATCH_KEY:
+        raise ValueError(f"{table_dir} is not partitioned by {BATCH_KEY}")
 
     reader = spark.readStream.schema(PAGES_SCHEMA)
     if max_files_per_trigger is not None:
@@ -64,155 +89,41 @@ def stream_extract(
     extracted = run_extraction(pages, num_partitions=num_partitions)
 
     def _commit(batch_df, batch_id: int) -> None:
-        table.overwrite_partitions(
-            batch_df.withColumn("batch_id", F.lit(int(batch_id)).cast("long")),
-            extra_summary={"stream_batch_id": int(batch_id)},
+        query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
         )
-
-    writer = (
-        extracted.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_extract_with_callbacks(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    callbacks_dir: str,
-    num_partitions: int = DEFAULT_PARTITIONS,
-    available_now: bool = True,
-    callback_fn=None,
-    lineage_dir: str | None = None,
-    run_prefix: str | None = None,
-) -> StreamingQuery:
-    """Callback sink (S9) + progress reporting (O10): the reference's
-    completion webhook (``cv_api/main.py:199-220``) and per-job progress
-    callback become DATA — one summary row per micro-batch appended to a
-    ``callbacks`` table via ``foreachBatch``, plus an optional driver-side
-    ``callback_fn(summary_dict)`` hook (the literal webhook POST slot).
-
-    The per-batch summary agg collects k rows (k = 1) — driver-side by
-    design, like any foreachBatch commit hook; the data path itself never
-    leaves executors.
-
-    With ``lineage_dir`` set, each micro-batch also appends the SAME
-    per-partition lineage rows the batch path writes
-    (``pipeline/lineage.py``), run_id = ``{run_prefix}-batch-{batch_id}``.
-    ``run_prefix`` defaults to a hash of ``checkpoint_dir`` — STABLE
-    across restarts of the same logical query (same checkpoint) and
-    unique across different queries sharing one lineage_dir, so run ids
-    never collide between queries. A micro-batch whose lineage run_id
-    already exists is SKIPPED entirely (data + lineage + callback) — the
-    streaming twin of the batch path's resume (which skips partitions
-    already live in the results table), making checkpoint replay of a
-    committed batch idempotent. Replay caveat:
-    the lineage row is the commit point, so a crash BETWEEN the data
-    write and the lineage write re-runs the batch and re-appends its
-    data parquet — the one at-least-once window a non-transactional
-    file-append sink cannot close; readers needing exactly-once counts
-    should consume the lineage table (latest row per run_id/partition),
-    not raw output row counts.
-    """
-    import hashlib
-
-    from ..pipeline.lineage import lineage_rows
-
-    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
-    extracted = run_extraction(pages, num_partitions=num_partitions)
-
-    prefix = run_prefix or "q" + hashlib.md5(checkpoint_dir.encode()).hexdigest()[:8]
-
-    # cumulative progress across micro-batches — the streaming analog of
-    # the reference's per-job progress percentages (cv_api/main.py:223-301);
-    # with an unbounded stream there is no denominator, so progress is
-    # docs-processed-so-far. Restored from this query's own lineage rows
-    # on restart (not a bare closure counter that would reset to 0).
-    totals = {"docs": -1}
-
-    def _committed_run_ids() -> set[str]:
-        if lineage_dir is None:
-            return set()
-        from pyspark.errors import AnalysisException
-
-        try:
-            lin = spark.read.parquet(lineage_dir)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-                return set()
-            raise
-        mine = lin.filter(F.col("run_id").startswith(prefix + "-batch-"))
-        return {r["run_id"] for r in mine.select("run_id").distinct().collect()}
-
-    def _handle(batch_df, batch_id: int) -> None:
-        from datetime import datetime, timezone
-
-        run_id = f"{prefix}-batch-{batch_id}"
-        if lineage_dir is not None:
-            committed = _committed_run_ids()
-            if totals["docs"] < 0:  # first batch after (re)start
-                lin = spark.read.parquet(lineage_dir) if committed else None
-                totals["docs"] = (
-                    int(
-                        lin.filter(F.col("run_id").startswith(prefix + "-batch-"))
-                        .agg(F.sum("doc_count"))
-                        .collect()[0][0]
-                        or 0
-                    )
-                    if lin is not None
-                    else 0
-                )
-            if run_id in committed:
-                return  # checkpoint replay of an already-committed batch
-        elif totals["docs"] < 0:
-            totals["docs"] = 0
-        started_at = datetime.now(timezone.utc)
-        batch_df.persist()
-        batch_df.write.mode("append").parquet(out_dir)
-        if lineage_dir is not None:
-            # same commit discipline as the batch path: lineage appended
-            # only after the data write returned
-            lineage_rows(
-                batch_df, run_id=run_id, started_at=started_at,
-                partitions_total=num_partitions,
-            ).write.mode("append").parquet(lineage_dir)
-        row = batch_df.agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum(F.when(F.col("status") == "succeeded", 1).otherwise(0)).alias("ok_count"),
-            F.sum(F.when(F.col("status") != "succeeded", 1).otherwise(0)).alias("failed_count"),
-            F.sum(F.coalesce(F.col("doc_bytes"), F.lit(0))).alias("byte_count"),
-            F.sum(F.coalesce(F.col("cost_usd"), F.lit(0.0))).alias("total_cost_usd"),
-        ).collect()[0]
-        totals["docs"] += int(row["doc_count"] or 0)
+        if not query_id:
+            raise RuntimeError("foreachBatch ran without a streaming query id")
+        key = f"{query_id}-{batch_id}"
+        mine = [
+            e for e in table.plan_files() if e["partition"].startswith(f"{query_id}-")
+        ]
+        if any(e["partition"] == key for e in mine):
+            return  # replay of a committed batch
+        entries, _, lineage = stage_lineage(
+            spark,
+            table,
+            batch_df.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+            .withColumn(BATCH_KEY, F.lit(key)),
+            key,
+            datetime.now(timezone.utc),
+            num_partitions,
+        )
         summary = {
+            "query_id": query_id,
             "batch_id": int(batch_id),
-            "doc_count": int(row["doc_count"] or 0),
-            "ok_count": int(row["ok_count"] or 0),
-            "failed_count": int(row["failed_count"] or 0),
-            "byte_count": int(row["byte_count"] or 0),
-            "total_cost_usd": float(row["total_cost_usd"] or 0.0),
-            "status": "succeeded" if not (row["failed_count"] or 0) else "partial",
-            "docs_cumulative": totals["docs"],
+            **lineage,
+            "status": "partial" if lineage["failed_count"] else "succeeded",
+            "docs_cumulative": sum(e["rows"] for e in mine) + lineage["doc_count"],
         }
-        spark.createDataFrame(
-            [summary],
-            "batch_id long, doc_count long, ok_count long, failed_count long, "
-            "byte_count long, total_cost_usd double, status string, "
-            "docs_cumulative long",
-        ).withColumn("finished_at", F.current_timestamp()).write.mode("append").parquet(
-            callbacks_dir
+        table.commit_overwrite(
+            entries, extra_summary={"stream_batch_id": int(batch_id), "lineage": summary}
         )
         if callback_fn is not None:
             callback_fn(summary)
-        batch_df.unpersist()
 
     writer = (
-        extracted.writeStream.foreachBatch(_handle)
+        extracted.writeStream.foreachBatch(_commit)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )

@@ -263,8 +263,9 @@ def test_lineage_ice_sink_resume_and_snapshots(spark, tmp_path):
 
 
 def test_stream_extract_to_icetable_batches(spark, tmp_path):
-    """Streaming sink: one snapshot per micro-batch, batch_id-partitioned,
-    and a replayed batch REPLACES its partition instead of duplicating."""
+    """Streaming sink: one snapshot per micro-batch, each in its own
+    (query id, batch id) partition, and a re-committed batch REPLACES its
+    partition instead of duplicating."""
     from ocr_endpoint_project_spark.sources.pages import corpus_pages
     from ocr_endpoint_project_spark.streaming import stream_extract
 

@@ -3,8 +3,6 @@ offsets, checkpointed exactly-once restart, non-append policy."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -143,94 +141,6 @@ def test_batch_read_null_fills_evolved_schema(spark, tmp_path):
     assert all(notes[k] == f"n{k}" for k in range(20, 30))
 
 
-def test_stream_writer_sink_commits_snapshots(spark, tmp_path):
-    """writeStream.format('icetable'): each micro-batch lands as one
-    append snapshot via two-phase commit, readable by scan() and the
-    batch reader, tagged with stream_batch_id + idempotency key."""
-    src = str(tmp_path / "src")
-    tdir = str(tmp_path / "t")
-    ckpt = str(tmp_path / "ckpt")
-    t = IceTable.create(tdir, partition_col="part", stat_cols=["k"])
-
-    def feed(lo, hi):
-        _df(spark, lo, hi).coalesce(1).write.mode("append").parquet(src)
-
-    def drain():
-        q = (
-            spark.readStream.schema("k long, v long, part int")
-            .parquet(src)
-            .writeStream.format("icetable")
-            .option("path", tdir)
-            .option("runId", "runA")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    feed(0, 30)
-    drain()
-    feed(30, 50)
-    drain()
-    got = t.scan(spark)
-    assert {r.k for r in got.collect()} == set(range(50))
-    snaps = t.snapshots()
-    assert [s["operation"] for s in snaps] == ["append", "append"]
-    assert [s["summary"]["stream_batch_id"] for s in snaps] == [0, 1]
-    assert [s["summary"]["idempotency_key"] for s in snaps] == ["runA:0", "runA:1"]
-    # hive partition layout holds (partition pruning works on sink output)
-    assert t.scan(spark, partition_values={1}).filter("k % 4 != 1").count() == 0
-
-
-def test_stream_writer_replayed_batch_commits_once(spark, tmp_path):
-    """Crash between table commit and checkpoint ack => Spark re-runs the
-    batch. The idempotency key skips the second commit and removes the
-    replayed attempt's files."""
-    import glob
-
-    from ocr_endpoint_project_spark.sources.icetable_source import (
-        IcetableStreamWriter,
-    )
-
-    tdir = str(tmp_path / "t")
-    t = IceTable.create(tdir, partition_col=None, stat_cols=["k"])
-    schema = _df(spark, 0, 10).drop("part").schema
-    w = IcetableStreamWriter(schema, {"path": tdir, "runid": "r1"})
-    rows = _df(spark, 0, 10).drop("part").collect()
-    msg1 = w.write(iter(rows))
-    w.commit([msg1], batchId=0)
-    assert len(t.snapshots()) == 1
-    n_files = len(glob.glob(os.path.join(tdir, "data", "*.parquet")))
-    # replay: a fresh task attempt writes new files, commit must no-op
-    msg2 = w.write(iter(rows))
-    w.commit([msg2], batchId=0)
-    assert len(t.snapshots()) == 1
-    assert len(glob.glob(os.path.join(tdir, "data", "*.parquet"))) == n_files
-    assert t.scan(spark).count() == 10
-    # next batch commits normally
-    msg3 = w.write(iter(_df(spark, 10, 15).drop("part").collect()))
-    w.commit([msg3], batchId=1)
-    assert t.scan(spark).count() == 15
-
-
-def test_stream_writer_abort_removes_files(spark, tmp_path):
-    import glob
-
-    from ocr_endpoint_project_spark.sources.icetable_source import (
-        IcetableStreamWriter,
-    )
-
-    tdir = str(tmp_path / "t")
-    t = IceTable.create(tdir, partition_col=None, stat_cols=["k"])
-    schema = _df(spark, 0, 10).drop("part").schema
-    w = IcetableStreamWriter(schema, {"path": tdir})
-    msg = w.write(iter(_df(spark, 0, 10).drop("part").collect()))
-    assert glob.glob(os.path.join(tdir, "data", "*.parquet"))
-    w.abort([msg], batchId=0)
-    assert not glob.glob(os.path.join(tdir, "data", "*.parquet"))
-    assert t.snapshots() == []
-
-
 def test_batch_reader_filter_pushdown_prunes_files(spark, tmp_path):
     """Catalyst filters reach the metadata layer: partition equality
     prunes manifests, stat-column ranges skip files by footer min/max —
@@ -313,43 +223,6 @@ def test_stream_rate_limit_bounds_batches(spark, tmp_path):
     assert non_empty[1:4] == [[3], [4], [5]]
 
 
-def test_stream_writer_concurrent_commits_serialize(spark, tmp_path):
-    """Two sinks (different queries/runIds) committing to one table at
-    once: the CAS loop serializes them — both snapshots land, no rows
-    lost, no file overwritten."""
-    import threading
-
-    from ocr_endpoint_project_spark.sources.icetable_source import (
-        IcetableStreamWriter,
-    )
-
-    tdir = str(tmp_path / "t")
-    t = IceTable.create(tdir, partition_col=None, stat_cols=["k"])
-    schema = _df(spark, 0, 10).drop("part").schema
-    rows_a = _df(spark, 0, 10).drop("part").collect()
-    rows_b = _df(spark, 10, 25).drop("part").collect()
-    wa = IcetableStreamWriter(schema, {"path": tdir, "runid": "qa"})
-    wb = IcetableStreamWriter(schema, {"path": tdir, "runid": "qb"})
-    ma, mb = wa.write(iter(rows_a)), wb.write(iter(rows_b))
-    errs: list = []
-
-    def go(w, m):
-        try:
-            w.commit([m], batchId=0)
-        except Exception as e:  # pragma: no cover
-            errs.append(e)
-
-    ta = threading.Thread(target=go, args=(wa, ma))
-    tb = threading.Thread(target=go, args=(wb, mb))
-    ta.start(); tb.start(); ta.join(); tb.join()
-    assert not errs
-    assert len(t.snapshots()) == 2
-    assert {s["summary"]["idempotency_key"] for s in t.snapshots()} == {
-        "qa:0", "qb:0"
-    }
-    assert {r.k for r in t.scan(spark).collect()} == set(range(25))
-
-
 def test_stream_reader_restart_cap_never_regresses(spark, tmp_path):
     """Regression (r6 ADVICE): a restarted query builds a FRESH reader
     whose cap base was startingsnapshotid (0), so with
@@ -388,68 +261,3 @@ def test_stream_reader_restart_cap_never_regresses(spark, tmp_path):
     r3 = IcetableStreamReader(None, {"path": tdir, "maxsnapshotspertrigger": "1"})
     r3.commit({"snapshot_id": 6})
     assert r3.latestOffset()["snapshot_id"] == 7
-
-
-def test_stream_writer_fresh_query_batch0_not_dropped(spark, tmp_path):
-    """Regression (r6 ADVICE): with no runId, the old replay guard
-    dropped ANY batch whose id matched the last snapshot's
-    stream_batch_id — a brand-new query restarts at batch 0, so its
-    first batch was silently deleted.  The guard now requires content
-    identity; genuine same-content replays are still deduplicated."""
-    import glob
-
-    from ocr_endpoint_project_spark.sources.icetable_source import (
-        IcetableStreamWriter,
-    )
-
-    tdir = str(tmp_path / "t")
-    t = IceTable.create(tdir, partition_col=None, stat_cols=["k"])
-    schema = _df(spark, 0, 10).drop("part").schema
-    rows_a = _df(spark, 0, 10).drop("part").collect()
-    rows_b = _df(spark, 10, 25).drop("part").collect()  # different shape
-
-    w1 = IcetableStreamWriter(schema, {"path": tdir})
-    w1.commit([w1.write(iter(rows_a))], batchId=0)
-    assert len(t.snapshots()) == 1
-
-    # new query, fresh checkpoint: batch ids restart at 0 — must COMMIT
-    w2 = IcetableStreamWriter(schema, {"path": tdir})
-    w2.commit([w2.write(iter(rows_b))], batchId=0)
-    assert len(t.snapshots()) == 2
-    assert {r.k for r in t.scan(spark).collect()} == set(range(25))
-
-    # genuine replay (same batch id AND same content): deduplicated
-    n_files = len(glob.glob(os.path.join(tdir, "data", "*.parquet")))
-    w2.commit([w2.write(iter(rows_b))], batchId=0)
-    assert len(t.snapshots()) == 2
-    assert len(glob.glob(os.path.join(tdir, "data", "*.parquet"))) == n_files
-
-
-def test_stream_writer_checkpoint_location_is_default_key(spark, tmp_path):
-    """checkpointLocation (always present in a real writeStream) gives a
-    per-query idempotency key even without runId: same-content batch 0
-    from a DIFFERENT checkpoint commits; a replay from the SAME
-    checkpoint is skipped."""
-    from ocr_endpoint_project_spark.sources.icetable_source import (
-        IcetableStreamWriter,
-    )
-
-    tdir = str(tmp_path / "t")
-    t = IceTable.create(tdir, partition_col=None, stat_cols=["k"])
-    schema = _df(spark, 0, 10).drop("part").schema
-    rows = _df(spark, 0, 10).drop("part").collect()
-
-    wa = IcetableStreamWriter(schema, {"path": tdir, "checkpointlocation": "/ck/a"})
-    wa.commit([wa.write(iter(rows))], batchId=0)
-    assert t.snapshots()[-1]["summary"]["idempotency_key"] == "/ck/a:0"
-
-    # identical content, batch 0, DIFFERENT query (new checkpoint): commits
-    wb = IcetableStreamWriter(schema, {"path": tdir, "checkpointlocation": "/ck/b"})
-    wb.commit([wb.write(iter(rows))], batchId=0)
-    assert len(t.snapshots()) == 2
-    assert t.scan(spark).count() == 20
-
-    # replay from the same checkpoint: exactly-once
-    wa2 = IcetableStreamWriter(schema, {"path": tdir, "checkpointlocation": "/ck/a"})
-    wa2.commit([wa2.write(iter(rows))], batchId=0)
-    assert len(t.snapshots()) == 2

@@ -3,7 +3,10 @@ file via checkpoint, byte-identity preserved through the stream path."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from ocr_endpoint_project_spark.sources.icetable import IceTable
 from ocr_endpoint_project_spark.sources.pages import corpus_pages
@@ -11,13 +14,22 @@ from ocr_endpoint_project_spark.streaming import stream_extract
 
 
 def _await(q):
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not finish within 120 s"
+
+
+def _snapshot_summaries(table_dir):
+    return [s["summary"] for s in IceTable.load(table_dir).snapshots()]
+
+
+def _job_summaries(table_dir):
+    """The per-micro-batch job summaries, in commit order."""
+    return [s["lineage"] for s in _snapshot_summaries(table_dir)]
 
 
 def test_stream_extract_incremental(spark, tmp_path):
     """Each restart commits only the new files, one icetable snapshot per
-    micro-batch, partitioned by batch_id; a replayed batch REPLACES its
-    partition instead of duplicating it."""
+    micro-batch, each in its own (query id, batch id) partition; a
+    re-committed batch REPLACES its partition instead of duplicating it."""
     in_dir = str(tmp_path / "in")
     table_dir = str(tmp_path / "table")
     ckpt = str(tmp_path / "ckpt")
@@ -65,31 +77,32 @@ def test_stream_extract_incremental(spark, tmp_path):
 
 
 def test_stream_callback_sink(spark, tmp_path):
-    """S9/O10: foreachBatch callback sink — per-batch job summaries land
-    in the callbacks table AND reach the driver-side hook."""
-    from ocr_endpoint_project_spark.streaming import stream_extract_with_callbacks
+    """S9/O10: each micro-batch's job summary rides in the snapshot that
+    commits its rows, and the driver-side hook receives it after the
+    commit."""
+    from ocr_endpoint_project_spark.sources.icetable_source import register_icetable
 
     in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
+    table_dir = str(tmp_path / "table")
     ckpt = str(tmp_path / "ckpt")
-    cb_dir = str(tmp_path / "callbacks")
 
     pages = corpus_pages(spark, n=40, seed=7).cache()
     pages.write.mode("append").parquet(in_dir)
 
     received = []
     _await(
-        stream_extract_with_callbacks(
-            spark, in_dir, out_dir, ckpt, cb_dir,
+        stream_extract(
+            spark, in_dir, table_dir, ckpt,
             num_partitions=8, callback_fn=received.append,
         )
     )
 
     # data written
-    out = spark.read.parquet(out_dir)
+    table = IceTable.load(table_dir)
+    out = table.scan(spark)
     assert out.count() == 40
-    # one callback row per micro-batch, counts add up to the corpus
-    cbs = spark.read.parquet(cb_dir).collect()
+    # one summary per micro-batch, counts add up to the corpus
+    cbs = _job_summaries(table_dir)
     assert len(cbs) >= 1
     assert sum(r["doc_count"] for r in cbs) == 40
     # the corpus deliberately contains a few failing docs; ok+failed must
@@ -103,18 +116,66 @@ def test_stream_callback_sink(spark, tmp_path):
         for r in cbs
     )
     assert all(r["total_cost_usd"] > 0 for r in cbs)
-    # the driver-side hook (the reference's webhook POST slot) fired too
-    assert [c["doc_count"] for c in received] == [r["doc_count"] for r in cbs]
+    # the driver-side hook (the reference's webhook POST slot) received
+    # the committed summaries, in order
+    assert received == cbs
+    # the sink's output is readable by the icetable data source reader
+    register_icetable(spark)
+    via_reader = spark.read.format("icetable").option("path", table_dir).load()
+    assert sorted(r.url for r in via_reader.select("url").collect()) == sorted(
+        r.url for r in out.select("url").collect()
+    )
 
-    # restart with no new input: no duplicate data, no new callbacks
+    # restart with no new input: no duplicate data, no new summaries
     n_cb = len(cbs)
     _await(
-        stream_extract_with_callbacks(
-            spark, in_dir, out_dir, ckpt, cb_dir, num_partitions=8,
+        stream_extract(
+            spark, in_dir, table_dir, ckpt,
+            num_partitions=8, callback_fn=received.append,
         )
     )
-    assert spark.read.parquet(out_dir).count() == 40
-    assert spark.read.parquet(cb_dir).count() == n_cb
+    assert table.scan(spark).count() == 40
+    assert len(table.snapshots()) == n_cb
+    assert len(received) == n_cb
+    pages.unpersist()
+
+
+def test_stream_queries_share_one_table(spark, tmp_path):
+    """Two queries with different checkpoints write into one table. Each
+    one's first micro-batch is batch 0, yet neither replaces the other's
+    rows: the batch key carries the query id. Run one after the other,
+    then both at once (the table's CAS serializes the two sinks'
+    commits)."""
+    pages = corpus_pages(spark, n=40, seed=7).cache()
+    urls = sorted(r.url for r in pages.select("url").collect())
+    in_dirs = [str(tmp_path / f"in{i}") for i in range(2)]
+    for in_dir, half in zip(in_dirs, (urls[:20], urls[20:])):
+        pages.filter(F.col("url").isin(half)).write.parquet(in_dir)
+
+    for mode in ("sequential", "concurrent"):
+        table_dir = str(tmp_path / mode)
+        queries = []
+        for i, in_dir in enumerate(in_dirs):
+            q = stream_extract(
+                spark, in_dir, table_dir, str(tmp_path / f"ckpt-{mode}-{i}"),
+                num_partitions=8,
+            )
+            if mode == "sequential":
+                _await(q)
+            queries.append(q)
+        for q in queries:
+            _await(q)
+        out = IceTable.load(table_dir).scan(spark)
+        assert out.count() == 40, mode
+        assert out.select("url").distinct().count() == 40, mode
+        batch_ids = [s["stream_batch_id"] for s in _snapshot_summaries(table_dir)]
+        assert batch_ids == [0, 0], mode
+
+    # a table keyed any other way (a stream table keyed on the bare batch
+    # id) is refused before the query starts
+    IceTable.create(str(tmp_path / "old"), partition_col="batch_id", stat_cols=["url"])
+    with pytest.raises(ValueError, match="batch_key"):
+        stream_extract(spark, in_dirs[0], str(tmp_path / "old"), str(tmp_path / "ckpt-old"))
     pages.unpersist()
 
 
@@ -204,77 +265,64 @@ def test_windowed_watermark_drops_late_data(spark, tmp_path):
 
 
 def test_streaming_lineage_matches_batch_schema(spark, tmp_path):
-    """Streaming micro-batches emit the SAME lineage rows as the batch
-    path — one audit table, one schema, across both execution modes."""
+    """A streaming micro-batch's job summary carries the SAME lineage
+    facts as the batch sink's snapshot — one summary schema across both
+    execution modes."""
     from ocr_endpoint_project_spark.pipeline.lineage import run_with_lineage_ice
-    from ocr_endpoint_project_spark.streaming import stream_extract_with_callbacks
 
     pages = corpus_pages(spark, n=30, seed=3).cache()
 
-    # batch mode: the sink's lineage mirror, minus the snapshot it names
-    batch_out = str(tmp_path / "batch")
-    r = run_with_lineage_ice(spark, pages, batch_out, run_id="run-1", num_partitions=8)
-    batch_lin = spark.read.parquet(r["lineage_dir"]).drop("snapshot_id")
-
-    # streaming mode over the same input
-    in_dir = str(tmp_path / "in")
-    pages.write.mode("append").parquet(in_dir)
-    lin_dir = str(tmp_path / "stream_lineage")
-    q = stream_extract_with_callbacks(
-        spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        str(tmp_path / "cb"), num_partitions=8, lineage_dir=lin_dir,
+    # batch mode: the run's lineage summary in its snapshot
+    r = run_with_lineage_ice(
+        spark, pages, str(tmp_path / "batch"), run_id="run-1", num_partitions=8
     )
-    q.awaitTermination(120)
-    stream_lin = spark.read.parquet(lin_dir)
+    batch = IceTable.load(r["table_dir"]).snapshots()[-1]["summary"]["lineage"]
 
-    assert stream_lin.schema == batch_lin.schema
-    # identical per-partition content facts (counts + order-insensitive
-    # checksum) — only run ids and timestamps differ between modes
-    keys = ["partition_id", "doc_count", "ok_count", "failed_count", "byte_count", "checksum"]
-    b = {tuple(r[k] for k in keys) for r in batch_lin.select(*keys).collect()}
-    s = {tuple(r[k] for k in keys) for r in stream_lin.select(*keys).collect()}
-    assert b == s
-    # run ids are namespaced per query (stable hash of the checkpoint
-    # dir), so two queries sharing one lineage_dir can never collide
-    assert all("-batch-" in r["run_id"] for r in stream_lin.collect())
+    # streaming mode over the same input, all of it in one micro-batch
+    in_dir = str(tmp_path / "in")
+    table_dir = str(tmp_path / "table")
+    pages.write.mode("append").parquet(in_dir)
+    _await(stream_extract(spark, in_dir, table_dir, str(tmp_path / "ckpt"), num_partitions=8))
+    (stream,) = _job_summaries(table_dir)
+
+    # identical content facts (counts + order-insensitive checksum)
+    keys = ["doc_count", "ok_count", "failed_count", "byte_count", "checksum"]
+    assert {k: stream[k] for k in keys} == {k: batch[k] for k in keys}
+    assert stream["doc_count"] == 30
+    assert stream["total_cost_usd"] == pytest.approx(batch["total_cost_usd"])
     pages.unpersist()
 
 
 def test_streaming_lineage_replay_idempotent(spark, tmp_path):
-    """A restarted query replaying an already-committed micro-batch must
-    NOT double-append data or lineage: the run_id (stable checkpoint-hash
-    prefix + batch id) is the commit marker, mirroring the batch path's
-    resume."""
-    from ocr_endpoint_project_spark.streaming import stream_extract_with_callbacks
-
+    """A restarted query replaying an already-committed micro-batch (a
+    crash after the table commit, before the checkpoint commit) must not
+    commit it again: its (query id, batch id) key is already live, so the
+    replay stages, commits and calls back nothing."""
     pages = corpus_pages(spark, n=20, seed=7).cache()
     in_dir = str(tmp_path / "in")
     pages.write.mode("append").parquet(in_dir)
-    out_dir = str(tmp_path / "out")
-    lin_dir = str(tmp_path / "lineage")
+    table_dir = str(tmp_path / "table")
+    ckpt = str(tmp_path / "ckpt")
 
     calls: list[dict] = []
-    q = stream_extract_with_callbacks(
-        spark, in_dir, out_dir, str(tmp_path / "ckpt1"), str(tmp_path / "cb"),
-        num_partitions=8, lineage_dir=lin_dir, run_prefix="jobA",
-        callback_fn=calls.append,
-    )
-    q.awaitTermination(120)
-    n_out = spark.read.parquet(out_dir).count()
-    n_lin = spark.read.parquet(lin_dir).count()
-    assert n_out == 20 and len(calls) == 1
+    _await(stream_extract(
+        spark, in_dir, table_dir, ckpt, num_partitions=8, callback_fn=calls.append
+    ))
+    table = IceTable.load(table_dir)
+    assert table.scan(spark).count() == 20 and len(calls) == 1
     assert calls[0]["docs_cumulative"] == 20
 
-    # simulate a restart that replays batch 0: fresh checkpoint, same
-    # run_prefix, same input -> the batch's run_id already has lineage,
-    # so the handler must skip it entirely
-    q2 = stream_extract_with_callbacks(
-        spark, in_dir, out_dir, str(tmp_path / "ckpt2"), str(tmp_path / "cb"),
-        num_partitions=8, lineage_dir=lin_dir, run_prefix="jobA",
-        callback_fn=calls.append,
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).count() == n_out  # no double data
-    assert spark.read.parquet(lin_dir).count() == n_lin  # no double lineage
+    # the checkpoint forgets that batch 0 committed: the restart on the
+    # SAME checkpoint replays it (same query id, same batch id)
+    commit0 = os.path.join(ckpt, "commits", "0")
+    os.remove(commit0)
+    os.remove(os.path.join(ckpt, "commits", ".0.crc"))
+    _await(stream_extract(
+        spark, in_dir, table_dir, ckpt, num_partitions=8, callback_fn=calls.append
+    ))
+    assert os.path.exists(commit0)  # the replay ran and was acknowledged
+    assert table.scan(spark).count() == 20  # no double data
+    batch0 = [s for s in _snapshot_summaries(table_dir) if s["stream_batch_id"] == 0]
+    assert len(batch0) == 1  # no second summary snapshot
     assert len(calls) == 1  # no duplicate completion callback
     pages.unpersist()
