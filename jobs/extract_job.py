@@ -10,8 +10,8 @@ Usage (cluster or local):
         --run-id run-2026-08-16
 
 Results land in the icetable ``{output}/extracted_ice``: one overwrite
-snapshot per run, with the run's lineage in the snapshot summary, plus a
-per-partition lineage audit mirror at ``{output}/lineage``.
+snapshot per run, with the run's lineage in the snapshot summary and each
+partition's lineage in its manifest entry.
 
 The job is RESUMABLE: re-running with the same ``--output`` skips
 partitions already live in the table's current snapshot (exact
@@ -34,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     ap = argparse.ArgumentParser(description="distributed main-content extraction")
     ap.add_argument("--input", required=True, help="pages parquet directory")
-    ap.add_argument("--output", required=True, help="output root (extracted_ice/ + lineage/)")
+    ap.add_argument("--output", required=True, help="output root (holds extracted_ice/)")
     ap.add_argument("--partitions", type=int, default=256)
     ap.add_argument("--run-id", default="run-1")
     ap.add_argument("--quarantine", action="store_true", help="validate + quarantine first")

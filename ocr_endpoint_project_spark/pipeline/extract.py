@@ -4,8 +4,8 @@ Physical plan (SURVEY.md §4):
 
     scan pages (column-pruned: url, warc_ts, html, lang)
     -> Project partition_id = pmod(xxhash64(url), P)       (data-derived)
-    -> [left-anti join lineage.succeeded]                  (resume, J6)
-    -> Exchange hashpartitioning(partition_id, P)          (skew-defeating)
+    -> [Filter partition_id NOT IN live ids]               (resume, J6)
+    -> Exchange hashpartitioning(xxhash64(url), P)         (skew-defeating)
     -> MapInPandas extract_batch (bounded Arrow batches)
     -> Project (html dropped — blobs never survive the kernel)
 
@@ -62,22 +62,19 @@ def run_extraction(
     pages: DataFrame,
     num_partitions: int = DEFAULT_PARTITIONS,
     salt_buckets: int = 1,
-    done_partitions: DataFrame | None = None,
+    done_partitions: list[int] | None = None,
 ) -> DataFrame:
     """pages -> extracted DataFrame (EXTRACTED_SCHEMA).
 
-    ``done_partitions``: optional single-column ``partition_id`` frame of
-    already-succeeded partitions (checkpoint resume, J6) — removed with a
-    broadcast left-anti join before any extraction work happens.
+    ``done_partitions``: optional ids of already-succeeded partitions
+    (checkpoint resume, J6) — removed by a ``partition_id NOT IN`` filter,
+    which Catalyst places below the salted exchange, so no extraction or
+    shuffle work happens for them.
     """
     cols = [c for c in ("url", "warc_ts", "html", "text", "lang") if c in pages.columns]
     df = salted_pages(pages.select(*cols), num_partitions, salt_buckets)
-    if done_partitions is not None:
-        df = df.join(
-            F.broadcast(done_partitions.select("partition_id").distinct()),
-            "partition_id",
-            "left_anti",
-        )
+    if done_partitions:
+        df = df.filter(~F.col("partition_id").isin(done_partitions))
     extracted = df.select("url", "warc_ts", "lang", "html", "partition_id").mapInPandas(
         extract_batch, EXTRACTED_SCHEMA
     )

@@ -3,8 +3,9 @@
 The reference's job state machine (``cv_api/main.py:223-301``: queued ->
 processing -> succeeded|failed, timings, lineage ids) becomes DATA: one
 lineage row per logical partition with doc/byte counts, an
-order-insensitive content checksum, and stage timestamps. Resume is a
-broadcast anti-join of the input against committed partition ids.
+order-insensitive content checksum, and stage timestamps, stored in that
+partition's manifest entry. Resume filters the input to the partition
+ids NOT live in the table (``partition_id NOT IN``, read from metadata).
 
 Exactly-once contract: extracted rows land in an icetable
 (``sources/icetable.py``) by dynamic partition overwrite keyed by
@@ -12,13 +13,12 @@ Exactly-once contract: extracted rows land in an icetable
 duplicates them), and each run's overwrite snapshot is the ONE commit
 point: data and the run's lineage summary publish in the same CAS.
 Resume and progress read the table's current snapshot — its live
-files — never its history or a side table. The per-partition lineage
-parquet appended after each commit is an audit mirror (checksums,
-timings); nothing reads it back.
+files and their entries' lineage — never its history or a side table.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 from datetime import datetime, timezone
 
@@ -31,62 +31,45 @@ from .extract import DEFAULT_PARTITIONS, run_extraction
 STATUS_SUCCEEDED = "succeeded"
 
 
-def lineage_rows(
-    extracted: DataFrame,
-    run_id: str,
-    started_at: datetime | None = None,
-    partitions_total: int | None = None,
-) -> DataFrame:
-    """Aggregate extracted rows into one lineage row per partition.
+def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
+    """Aggregate extracted rows into one lineage row per partition: run
+    id, doc/ok/failed/byte counts, cost and checksum.
 
     Checksum: md5 over the sorted per-row md5s of extracted text — order-
     insensitive, so it is stable under task re-ordering.
-
-    ``started_at`` is the job/batch start wall-clock captured BEFORE the
-    data write (the reference records genuine per-stage timings,
-    cv_api/main.py:246-256); ``finished_at`` is the lineage-commit time,
-    so ``started_at < finished_at`` brackets the data write.
-    ``partitions_total`` records the run's configured partition count.
     """
-    started = (
-        F.lit(started_at).cast("timestamp")
-        if started_at is not None
-        else F.current_timestamp()
+    return extracted.groupBy("partition_id", F.lit(run_id).alias("run_id")).agg(
+        F.count(F.lit(1)).alias("doc_count"),
+        F.sum(F.when(F.col("status") == STATUS_SUCCEEDED, 1).otherwise(0)).alias("ok_count"),
+        F.sum(F.when(F.col("status") != STATUS_SUCCEEDED, 1).otherwise(0)).alias(
+            "failed_count"
+        ),
+        F.sum(F.coalesce(F.col("doc_bytes"), F.lit(0))).alias("byte_count"),
+        F.sum(F.coalesce(F.col("cost_usd"), F.lit(0.0))).alias("cost_usd"),
+        F.md5(
+            F.concat_ws(
+                "",
+                F.sort_array(
+                    F.collect_list(F.md5(F.coalesce(F.col("extracted_text"), F.lit(""))))
+                ),
+            )
+        ).alias("checksum"),
     )
-    return (
-        extracted.groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum(F.when(F.col("status") == STATUS_SUCCEEDED, 1).otherwise(0)).alias("ok_count"),
-            F.sum(F.when(F.col("status") != STATUS_SUCCEEDED, 1).otherwise(0)).alias(
-                "failed_count"
-            ),
-            F.sum(F.coalesce(F.col("doc_bytes"), F.lit(0))).alias("byte_count"),
-            F.sum(F.coalesce(F.col("cost_usd"), F.lit(0.0))).alias("cost_usd"),
-            F.md5(
-                F.concat_ws(
-                    "",
-                    F.sort_array(
-                        F.collect_list(F.md5(F.coalesce(F.col("extracted_text"), F.lit(""))))
-                    ),
-                )
-            ).alias("checksum"),
-        )
-        .select(
-            "partition_id",
-            F.lit(run_id).alias("run_id"),
-            "doc_count",
-            "ok_count",
-            "failed_count",
-            "byte_count",
-            "cost_usd",
-            "checksum",
-            started.alias("started_at"),
-            F.current_timestamp().alias("finished_at"),
-            F.lit(partitions_total).cast("int").alias("partitions_total"),
-            F.lit(STATUS_SUCCEEDED).alias("status"),
-        )
-    )
+
+
+def _lineage_summary(rows: list) -> dict:
+    """Sum per-partition :func:`lineage_rows` into one run summary on the
+    driver: doc/ok/failed/byte counts, total cost and an order-insensitive
+    checksum — md5 over the sorted per-partition checksums (None for no
+    rows)."""
+    summary = {
+        k: sum(r[k] for r in rows)
+        for k in ("doc_count", "ok_count", "failed_count", "byte_count")
+    }
+    summary["total_cost_usd"] = float(sum(r["cost_usd"] for r in rows))
+    checksums = "".join(sorted(r["checksum"] for r in rows))
+    summary["checksum"] = hashlib.md5(checksums.encode()).hexdigest() if rows else None
+    return summary
 
 
 def _live_partitions(files: list[dict]) -> set[int]:
@@ -94,10 +77,9 @@ def _live_partitions(files: list[dict]) -> set[int]:
     return {int(e["partition"]) for e in files}
 
 
-def ice_done_partitions(spark: SparkSession, table: IceTable) -> DataFrame | None:
+def ice_done_partitions(table: IceTable) -> list[int]:
     """Succeeded partition ids, read from the table's CURRENT snapshot:
-    the partition values of its live files (``plan_files``), or None for
-    an empty table.
+    the sorted partition values of its live files (``plan_files``).
 
     The sink writes one output row per input row, so every committed
     partition has a live file and every live file's partition was
@@ -106,59 +88,33 @@ def ice_done_partitions(spark: SparkSession, table: IceTable) -> DataFrame | Non
     ``compact``, and needs no side table — a crash between the commit
     and any bookkeeping can never lose or double-count a partition.
     """
-    done = sorted(_live_partitions(table.plan_files()))
-    if not done:
-        return None
-    return spark.createDataFrame([(p,) for p in done], "partition_id int")
+    return sorted(_live_partitions(table.plan_files()))
 
 
 def stage_lineage(
-    spark: SparkSession,
-    table: IceTable,
-    df: DataFrame,
-    run_id: str,
-    started_at: datetime,
-    partitions_total: int,
-) -> tuple[list[dict], DataFrame | None, dict]:
+    spark: SparkSession, table: IceTable, df: DataFrame, run_id: str
+) -> tuple[list[dict], list, dict]:
     """Phase 1 of a results-sink commit: stage ``df`` into ``table``
     (nothing is committed yet) and derive its lineage from the STAGED
     files, so the producing plan — the extraction kernel — runs exactly
     once, and the lineage reads blob-free parquet.
 
-    Returns ``(entries, lin, summary)``: the manifest entries for
-    ``IceTable.commit_overwrite``, the per-partition :func:`lineage_rows`
-    (None when nothing was staged) and their sum — doc/ok/failed/byte
-    counts, total cost and an order-insensitive checksum of the
-    per-partition checksums — from one collect.
+    Returns ``(entries, rows, summary)``: the manifest entries for
+    ``IceTable.commit_overwrite``, the collected per-partition
+    :func:`lineage_rows` (one collect of at most P rows) and their
+    :func:`_lineage_summary`.
     """
     entries = table.stage_overwrite(df)
-    summary = {
-        "doc_count": 0, "ok_count": 0, "failed_count": 0,
-        "byte_count": 0, "total_cost_usd": 0.0, "checksum": None,
-    }
-    if not entries:
-        return entries, None, summary
-    staged = spark.read.option("basePath", table.data_dir).parquet(
-        *[os.path.join(table.table_dir, e["path"]) for e in entries]
-    )
-    lin = lineage_rows(
-        staged, run_id, started_at=started_at, partitions_total=partitions_total
-    )
-    row = lin.agg(
-        F.sum("doc_count").alias("doc_count"),
-        F.sum("ok_count").alias("ok_count"),
-        F.sum("failed_count").alias("failed_count"),
-        F.sum("byte_count").alias("byte_count"),
-        F.sum("cost_usd").alias("total_cost_usd"),
-        F.md5(F.concat_ws("", F.sort_array(F.collect_list("checksum")))).alias(
-            "checksum"
-        ),
-    ).collect()[0]
-    # a staged-but-empty file set aggregates to NULLs
-    return entries, lin, {
-        k: row[k] if k == "checksum" else type(v)(row[k] or 0)
-        for k, v in summary.items()
-    }
+    rows = []
+    if entries:
+        # the staged schema is known: no footer-inference job
+        staged = (
+            spark.read.schema(df.schema)
+            .option("basePath", table.data_dir)
+            .parquet(*[os.path.join(table.table_dir, e["path"]) for e in entries])
+        )
+        rows = lineage_rows(staged, run_id).collect()
+    return entries, rows, _lineage_summary(rows)
 
 
 def job_progress(table_dir: str, num_partitions: int = DEFAULT_PARTITIONS) -> dict:
@@ -173,29 +129,26 @@ def job_progress(table_dir: str, num_partitions: int = DEFAULT_PARTITIONS) -> di
     (:func:`ice_done_partitions`) and ``docs_done`` the row count of the
     live files. Everything comes from table metadata — no Spark job.
 
-    The denominator is the ``partitions_total`` of the newest snapshot
-    summary that records one
-    (a resumed job may have been launched with a different partition
-    count than this caller assumes); ``num_partitions`` is the fallback
-    for a missing table or a history trimmed by ``expire_snapshots``.
+    The denominator is the ``partitions_total`` in the lineage of the live
+    manifest entry that finished last (a resumed job may have been
+    launched with a different partition count than this caller assumes);
+    live entries outlive snapshot expiry, so this holds after
+    ``expire_snapshots``. ``num_partitions`` is the fallback for a missing
+    table or one whose live entries carry no lineage.
 
     Returns ``{"stage", "percent", "partitions_done", "partitions_total",
     "docs_done"}``.
     """
     try:
-        table = IceTable.load(table_dir)
+        files = IceTable.load(table_dir).plan_files()
     except FileNotFoundError:
-        files, snapshots = [], []
-    else:
-        files, snapshots = table.plan_files(), table.snapshots()
+        files = []
     n_done = len(_live_partitions(files))
-    total = next(
-        (
-            int(s["summary"]["partitions_total"])
-            for s in reversed(snapshots)
-            if "partitions_total" in s["summary"]
-        ),
-        num_partitions,
+    lineage = [e["lineage"] for e in files if "lineage" in e]
+    total = (
+        int(max(lineage, key=lambda l: l["finished_at"])["partitions_total"])
+        if lineage
+        else num_partitions
     )
     return {
         "stage": (
@@ -219,25 +172,29 @@ def run_with_lineage_ice(
     durable lineage (north_rule: "writes extracted text plus span offsets
     back to Iceberg").
 
-    Layout: ``{out_dir}/extracted_ice`` (the icetable, partitioned by
-    ``partition_id``) and ``{out_dir}/lineage`` (parquet audit mirror,
-    append-only).
+    Layout: ``{out_dir}/extracted_ice``, the icetable partitioned by
+    ``partition_id``. Lineage lives only in its metadata.
 
     Each run (or resumed slice of a run) commits ONE snapshot via
     dynamic partition overwrite, and the run's LINEAGE RIDES IN THE
-    SNAPSHOT SUMMARY (run id, doc/ok/failed/byte counts, total cost, an
-    order-insensitive checksum-of-checksums, wall-clock bracket,
-    ``partitions_total``): data and lineage commit ATOMICALLY in the same
-    CAS — there is no window where one exists without the other.  The
-    flow is stage -> derive lineage from the staged files
-    (:func:`stage_lineage`, shared with the streaming sink) -> commit; a crash
-    before the commit leaves only unreferenced files.  Resume skips the
-    partitions live in the current snapshot (:func:`ice_done_partitions`).
-    The per-partition lineage rows are appended AFTER the commit as an
-    audit mirror; nothing reads them back, so losing them loses nothing.
+    COMMIT: the snapshot summary holds the run's (run id, doc/ok/failed/
+    byte counts, total cost, an order-insensitive checksum-of-checksums,
+    wall-clock bracket, ``partitions_total``), and each partition's
+    manifest entry holds that partition's :func:`lineage_rows` row with
+    the run's wall-clock bracket, ``partitions_total`` and ``status``
+    (``plan_files()[i]["lineage"]``), so it lives exactly as long as the
+    partition's files. Data and lineage publish ATOMICALLY in the same
+    CAS — there is no window where one exists without the other. The
+    flow is stage -> one collect of the lineage of the staged files
+    (:func:`stage_lineage`, shared with the streaming sink) -> commit; a
+    crash before the commit leaves only unreferenced files.
+
+    Resume skips the partitions live in the current snapshot
+    (:func:`ice_done_partitions`). When every partition is live the run
+    builds no plan and starts no Spark job: it commits an empty snapshot
+    carrying its (zero) lineage.
     """
     table_dir = os.path.join(out_dir, "extracted_ice")
-    lineage_dir = os.path.join(out_dir, "lineage")
     try:
         table = IceTable.load(table_dir)
     except FileNotFoundError:
@@ -245,47 +202,47 @@ def run_with_lineage_ice(
             table_dir, partition_col="partition_id", stat_cols=["url", "doc_bytes"]
         )
 
-    done = ice_done_partitions(spark, table)
-    extracted = run_extraction(pages, num_partitions=num_partitions, done_partitions=done)
-
+    done = ice_done_partitions(table)
     started_at = datetime.now(timezone.utc)  # before the data write
-    entries, lin, lineage_summary = stage_lineage(
-        spark,
-        table,
-        # re-cluster by the LOGICAL id so the overwrite writes one file
-        # set per partition_id (extraction tasks are physically spread by
-        # the raw url hash for balance — see extract.salted_pages). Rows
-        # here are blob-free (html was projected away in the kernel), so
-        # this exchange moves ~10% of the input bytes; a write-stage
-        # exchange keyed on P distinct values is birthday-lumpy, which is
-        # acceptable for pure IO tasks but must never sit in front of the
-        # extraction kernel.
-        extracted.repartition(num_partitions, F.col("partition_id")),
-        run_id,
-        started_at,
-        num_partitions,
-    )
+    if set(range(num_partitions)) <= set(done):
+        entries, rows, summary = [], [], _lineage_summary([])
+    else:
+        extracted = run_extraction(
+            pages, num_partitions=num_partitions, done_partitions=done
+        )
+        entries, rows, summary = stage_lineage(
+            spark,
+            table,
+            # re-cluster by the LOGICAL id so the overwrite writes one file
+            # set per partition_id (extraction tasks are physically spread
+            # by the raw url hash for balance — see extract.salted_pages).
+            # Rows here are blob-free (html was projected away in the
+            # kernel), so this exchange moves ~10% of the input bytes; a
+            # write-stage exchange keyed on P distinct values is
+            # birthday-lumpy, which is acceptable for pure IO tasks but
+            # must never sit in front of the extraction kernel.
+            extracted.repartition(num_partitions, F.col("partition_id")),
+            run_id,
+        )
+    run = {
+        "started_at": started_at.isoformat(),
+        "finished_at": datetime.now(timezone.utc).isoformat(),
+        "partitions_total": num_partitions,
+    }
+    by_partition = {
+        str(r["partition_id"]): {**r.asDict(), **run, "status": STATUS_SUCCEEDED}
+        for r in rows
+    }
+    for e in entries:
+        if e["partition"] in by_partition:
+            e["lineage"] = by_partition.pop(e["partition"])
     snap = table.commit_overwrite(
-        entries,
-        extra_summary={
-            "run_id": run_id,
-            "started_at": started_at.isoformat(),
-            "finished_at": datetime.now(timezone.utc).isoformat(),
-            "partitions_total": num_partitions,
-            "lineage": lineage_summary,
-        },
+        entries, extra_summary={"run_id": run_id, **run, "lineage": summary}
     )
-    if lin is not None:
-        # audit mirror (see docstring) — written only after the commit
-        lin.withColumn("snapshot_id", F.lit(int(snap["snapshot_id"]))).write.mode(
-            "append"
-        ).parquet(lineage_dir)
-
     return {
         "run_id": run_id,
         "snapshot_id": int(snap["snapshot_id"]),
-        "resumed_partitions_skipped": 0 if done is None else done.count(),
+        "resumed_partitions_skipped": len(done),
         "partitions_total": len(_live_partitions(table.plan_files())),
         "table_dir": table_dir,
-        "lineage_dir": lineage_dir,
     }

@@ -63,9 +63,9 @@ def build_session(
         # v2 file-output commit: task outputs move to the destination at
         # task commit (one rename) instead of the v1 two-phase job-commit
         # rename cascade — the standard fast path on HDFS-like stores;
-        # the signature-table pins and lineage writes are all
-        # write-then-read-back in one job, where v1's extra safety buys
-        # nothing.
+        # the signature-table pins are write-then-read-back in one job,
+        # where v1's extra safety buys nothing (lineage is table
+        # metadata, not a write).
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -1015,7 +1015,8 @@ class IceTable:
         pcol = meta["partition_col"]
         if pcol is None:
             raise ValueError("compact needs a partitioned table")
-        counts = Counter(e["partition"] for e in self.plan_files())
+        files = self.plan_files()
+        counts = Counter(e["partition"] for e in files)
         targets = {p for p, c in counts.items() if p is not None and c >= min_files}
         if not targets:
             return None
@@ -1038,7 +1039,18 @@ class IceTable:
             df = scanned.repartition(max(len(targets), 1), pcol)
             if order:
                 df = df.sortWithinPartitions(*order)
-        return self.overwrite_partitions(df, extra_summary={"compaction": True})
+        # a rewrite keeps the same rows, so each partition's entry lineage
+        # (counts, order-insensitive checksum) still holds: carry it over
+        lineage = {
+            e["partition"]: e["lineage"]
+            for e in files
+            if e["partition"] in targets and "lineage" in e
+        }
+        entries = self.stage_overwrite(df)
+        for e in entries:
+            if e["partition"] in lineage:
+                e["lineage"] = lineage.pop(e["partition"])
+        return self.commit_overwrite(entries, extra_summary={"compaction": True})
 
     def remove_orphan_files(self) -> int:
         """Delete data files referenced by NO snapshot in the CURRENT
@@ -1104,11 +1116,12 @@ class IceTable:
         def build(meta: dict, seq: int, token: str):
             # expiry is itself a commit: rewrite the snapshot log but keep
             # the current snapshot's manifests untouched
-            keep = meta["snapshots"][-keep_last:] if keep_last > 0 else []
+            # the current snapshot is kept as the expire snapshot itself
+            kept = meta["snapshots"][-keep_last:-1] if keep_last > 1 else []
             manifest_names = self._current_manifest_names(meta)
-            summary = {"expired": len(meta["snapshots"]) - len(keep)}
+            summary = {"expired": len(meta["snapshots"]) - len(kept)}
             # splice the trimmed history in via the commit loop's meta copy
-            meta["snapshots"] = keep[:-1] if keep else []
+            meta["snapshots"] = kept
             return manifest_names, summary
 
         snap = self._commit("expire", build)

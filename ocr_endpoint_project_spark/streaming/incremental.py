@@ -21,8 +21,6 @@ lineage guarantees in both modes.
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -106,8 +104,6 @@ def stream_extract(
             batch_df.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
             .withColumn(BATCH_KEY, F.lit(key)),
             key,
-            datetime.now(timezone.utc),
-            num_partitions,
         )
         summary = {
             "query_id": query_id,

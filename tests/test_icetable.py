@@ -171,6 +171,8 @@ def test_expire_snapshots_removes_history_and_orphans(spark, tmp_path):
     t.overwrite_partitions(_df(spark, 0, 40, factor=3).filter("part = 0"))
     n_files_before = sum(len(fs) for _, _, fs in os.walk(t.data_dir))
     res = t.expire_snapshots(keep_last=1)
+    # both ids leave the log: the expire snapshot replaces the head
+    assert res["summary"]["expired"] == 2
     assert res["summary"]["orphan_files_removed"] > 0
     n_files_after = sum(len(fs) for _, _, fs in os.walk(t.data_dir))
     assert n_files_after < n_files_before
@@ -260,6 +262,35 @@ def test_lineage_ice_sink_resume_and_snapshots(spark, tmp_path):
     # time travel to the r1 snapshot still reads the same 60 docs
     assert table.scan(spark, snapshot_id=r2["snapshot_id"]).count() == 60
     pages.unpersist()
+
+
+def test_entry_lineage_survives_compact_and_expiry(spark, tmp_path):
+    """Each partition's lineage rides in its manifest entry, so it lives
+    as long as the partition's files: ``compact`` carries it to the
+    rewritten files and ``expire_snapshots`` keeps it with them."""
+    from ocr_endpoint_project_spark.pipeline.lineage import (
+        lineage_rows,
+        run_with_lineage_ice,
+    )
+    from ocr_endpoint_project_spark.sources.pages import corpus_pages
+
+    pages = corpus_pages(spark, n=40, seed=11)
+    r = run_with_lineage_ice(spark, pages, str(tmp_path / "job"), num_partitions=8)
+    table = IceTable.load(r["table_dir"])
+    old_files = table.plan_files()
+    before = {e["partition"]: e["lineage"]["checksum"] for e in old_files}
+    assert len(before) == 8
+
+    assert table.compact(spark, min_files=1) is not None
+    table.expire_snapshots(keep_last=1)
+    files = table.plan_files()
+    assert {e["path"] for e in files}.isdisjoint(e["path"] for e in old_files)
+    assert all("lineage" in e for e in files)
+    assert {e["partition"]: e["lineage"]["checksum"] for e in files} == before
+    assert sum(e["lineage"]["doc_count"] for e in files) == table.scan(spark).count() == 40
+    # the carried checksums still describe the rewritten rows
+    recomputed = lineage_rows(table.scan(spark), "check").collect()
+    assert {str(x["partition_id"]): x["checksum"] for x in recomputed} == before
 
 
 def test_stream_extract_to_icetable_batches(spark, tmp_path):
@@ -511,9 +542,7 @@ def test_stage_data_unescapes_hive_partition_values(spark, tmp_path):
 def test_ice_sink_lineage_in_summary_and_log_resume(spark, tmp_path):
     """r6 VERDICT #6: lineage rides in the snapshot summary (atomic with
     the data commit), and resume and progress derive from the table's
-    current snapshot — losing the lineage parquet mirror loses nothing."""
-    import shutil
-
+    current snapshot — there is no side table to lose."""
     from ocr_endpoint_project_spark.pipeline.lineage import (
         ice_done_partitions,
         job_progress,
@@ -534,10 +563,8 @@ def test_ice_sink_lineage_in_summary_and_log_resume(spark, tmp_path):
     assert s["lineage"]["byte_count"] > 0
     assert len(s["lineage"]["checksum"]) == 32
     assert s["started_at"] < s["finished_at"]
-    # resume and progress come from the table, not the parquet mirror
-    shutil.rmtree(r1["lineage_dir"])
-    done = ice_done_partitions(spark, table)
-    assert done is not None and done.count() == 8
+    # resume and progress come from the table's metadata
+    assert ice_done_partitions(table) == list(range(8))
     p = job_progress(r1["table_dir"])
     assert p["stage"] == "completed" and p["percent"] == 100.0
     assert p["partitions_done"] == 8 and p["partitions_total"] == 8

@@ -165,13 +165,9 @@ def test_job_progress_from_lineage(spark, pages, tmp_path):
     assert p0["stage"] == "preparing" and p0["percent"] == 0.0
 
     run_with_lineage_ice(spark, pages, out, run_id="run-1", num_partitions=8)
-    sc = spark.sparkContext
-    sc.setJobGroup("job_progress", "progress reads table metadata only")
-    try:
-        p1 = job_progress(table_dir, num_partitions=8)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("job_progress") == []
+    # progress reads table metadata only
+    p1, jobs = _spark_jobs(spark, "job_progress", lambda: job_progress(table_dir, 8))
+    assert jobs == 0
     assert p1["stage"] == "completed" and p1["percent"] == 100.0
     assert p1["partitions_done"] == 8
     assert p1["docs_done"] == pages.count()
@@ -194,8 +190,11 @@ def test_lineage_stage_timestamps_real(spark, pages, tmp_path):
 
     out = str(tmp_path / "job")
     res = run_with_lineage_ice(spark, pages, out, run_id="run-1", num_partitions=8)
-    rows = spark.read.parquet(res["lineage_dir"]).collect()
-    assert rows and all(r["started_at"] < r["finished_at"] for r in rows)
+    rows = [e["lineage"] for e in IceTable.load(res["table_dir"]).plan_files()]
+    assert rows and all(
+        datetime.fromisoformat(r["started_at"]) < datetime.fromisoformat(r["finished_at"])
+        for r in rows
+    )
     s = IceTable.load(res["table_dir"]).snapshots()[-1]["summary"]
     assert datetime.fromisoformat(s["started_at"]) < datetime.fromisoformat(
         s["finished_at"]
@@ -212,6 +211,69 @@ def test_job_progress_denominator_from_lineage(spark, pages, tmp_path):
     p = job_progress(r["table_dir"], num_partitions=999)
     assert p["partitions_total"] == 8
     assert p["stage"] == "completed" and p["percent"] == 100.0
+
+
+def test_job_progress_after_snapshot_expiry(spark, pages, tmp_path):
+    """Expiring a finished run's history leaves only the expire snapshot,
+    which records no ``partitions_total``; the live entries' lineage still
+    does, so the job keeps reading as completed over its own 8
+    partitions, not the caller's default 64."""
+    r = run_with_lineage_ice(spark, pages, str(tmp_path / "job"), num_partitions=8)
+    IceTable.load(r["table_dir"]).expire_snapshots(keep_last=1)
+    p = job_progress(r["table_dir"])
+    assert p["stage"] == "completed" and p["percent"] == 100.0
+    assert p["partitions_total"] == 8
+
+
+def _spark_jobs(spark, group: str, fn):
+    """``fn()``'s result and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sink_spark_job_counts(spark, tmp_path):
+    """One commit reads its lineage once: a fresh run and a resumed run
+    each start the stage's jobs plus one lineage collect, and a rerun over
+    a fully done table builds no plan at all — yet still commits its
+    zero-doc snapshot."""
+    # uncached, so no run pays for materializing an input cache
+    pages = corpus_pages(spark, n=N_CORPUS, seed=42)
+    # two shuffle-map jobs and the write job, then the lineage collect's
+    # map and result jobs
+    _, fresh = _spark_jobs(
+        spark, "sink_fresh",
+        lambda: run_with_lineage_ice(spark, pages, str(tmp_path / "fresh"), num_partitions=8),
+    )
+    assert fresh == 5
+
+    out = str(tmp_path / "job")
+    half = (
+        salted_pages(pages, num_partitions=8)
+        .filter(F.col("partition_id") % 2 == 0)
+        .drop("partition_id")
+    )
+    run_with_lineage_ice(spark, half, out, run_id="A", num_partitions=8)
+    r, resumed = _spark_jobs(
+        spark, "sink_resume",
+        lambda: run_with_lineage_ice(spark, pages, out, run_id="B", num_partitions=8),
+    )
+    assert r["resumed_partitions_skipped"] == 4
+    assert resumed == 5
+
+    r, rerun = _spark_jobs(
+        spark, "sink_rerun",
+        lambda: run_with_lineage_ice(spark, pages, out, run_id="C", num_partitions=8),
+    )
+    assert rerun == 0
+    assert r["resumed_partitions_skipped"] == 8
+    s = IceTable.load(r["table_dir"]).snapshots()[-1]["summary"]
+    assert s["run_id"] == "C" and s["partitions_total"] == 8
+    assert s["lineage"]["doc_count"] == 0 and s["replaced_partitions"] == []
 
 
 def test_canonicalize_url_separator_correct(spark):
