@@ -9,8 +9,9 @@ Modes:
 
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BE_REPEATS (default 3).
 Prints one JSON line per mode, mirroring bench.py's methodology (same
-session config, same noop sink, same materialize dir), so numbers here
-are directly comparable to the frozen bench's query section.
+session config, same noop sink, the same parquet pins — here in the
+per-application pin dir, removed at exit), so numbers here are directly
+comparable to the frozen bench's query section.
 """
 
 from __future__ import annotations
@@ -23,14 +24,11 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-from bench import CACHE_DIR, HEADLINE, _session, hw_control, kernel_control  # noqa: E402
+from bench import HEADLINE, _session, hw_control, kernel_control  # noqa: E402
 
 
 def _spark():
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    os.environ.setdefault(
-        "SPARK_GRAFT_MATERIALIZE_DIR", os.path.join(CACHE_DIR, "materialized")
-    )
     return _session("bench-extra", cpus)
 
 

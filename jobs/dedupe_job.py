@@ -14,7 +14,10 @@ keeper per cluster -> deduplicated corpus written to
 ``{output}/deduped`` with ``{output}/clusters`` holding the full
 per-doc cluster assignment (the audit trail). Signature/pair
 intermediates are materialized under ``{output}/signatures`` — the
-100-TB shape (a signatures TABLE, never recomputed).
+100-TB shape (a signatures TABLE, never recomputed) — one directory per
+pin, ``signatures/<name>/<token>`` (a pin name reached more than once
+gets one token directory each time). They are the job's output and are
+kept; a rerun into the same ``--output`` adds new token directories.
 """
 
 from __future__ import annotations

@@ -90,6 +90,7 @@ def main() -> None:
     # operators/trainprep.train_quality_probe (integer-exact GD, the
     # DCLM-style classifier step)
     if getattr(args, "trained_probe", False):
+        from ocr_endpoint_project_spark.operators.dedup import _pin
         from ocr_endpoint_project_spark.operators.trainprep import (
             QP_S,
             _qp_features,
@@ -97,7 +98,7 @@ def main() -> None:
             train_quality_probe,
         )
 
-        feat = _qp_features(docs).localCheckpoint()
+        feat = _pin(_qp_features(docs), "qp_features")
         w = train_quality_probe(feat)
         keep = feat.filter(F.expr(_qp_score_expr(w)) > QP_S // 2).select("doc_id")
         docs = docs.join(keep, "doc_id", "left_semi")

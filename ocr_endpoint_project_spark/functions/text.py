@@ -27,10 +27,16 @@ def hoist(df: DataFrame, keep: list[str] | tuple[str, ...], **exprs: Column) -> 
     itself is O(rows) and drops no rows: ``struct(...)`` is never null
     (only its fields can be), so ``array(struct(...))`` always holds one
     non-null element and every input row yields exactly one output row.
+    The intermediate struct column takes a name no input column has.
     """
+    if clash := {n.lower() for n in exprs} & {k.lower() for k in keep}:
+        raise ValueError(f"hoist: {sorted(clash)} both kept and computed")
+    tmp = "_hoisted"
+    while tmp in {c.lower() for c in df.columns}:
+        tmp = "_" + tmp
     packed = F.explode(F.array(F.struct(*[e.alias(n) for n, e in exprs.items()])))
-    tmp = df.select(*keep, packed.alias("_hoisted"))
-    return tmp.select(*keep, *[F.col(f"_hoisted.{n}").alias(n) for n in exprs])
+    out = df.select(*keep, packed.alias(tmp))
+    return out.select(*keep, *[F.col(f"{tmp}.{n}").alias(n) for n in exprs])
 
 
 def norm_tokens(col: Column | str) -> Column:

@@ -149,31 +149,22 @@ def _driver_union_find(pair_rows: list[tuple]) -> dict:
     return {x: find(x) for x in parent}
 
 
-def keeper_frame(ids: DataFrame, pairs: DataFrame, pin_name: str | None = None) -> DataFrame:
+def keeper_frame(ids: DataFrame, pairs: DataFrame) -> DataFrame:
     """pairs (doc_a, doc_b) + full id table (doc_id) -> per-id cluster
     assignment with keeper flag and size. Iterates ONLY over pair
     endpoints (duplicates are a small fraction of the corpus at 100 TB);
     untouched ids are singleton clusters by definition and join back
     without ever entering the loop.
 
-    Adaptive execution: ONE bounded collect (limit cap+1) both sizes the
-    graph and, when it fits, delivers the edge list — the typical caller
-    hands in the full LSH-band-join + verify plan unpinned, and a
-    separate count() would execute that dominant plan a second time
-    (round-5 fix). At or below CC_DRIVER_MAX_PAIRS the components resolve
-    driver-side (union-find over the collected pairs — identical min-id
-    labels, none of the per-round job overhead); past the cap the
-    truncated collect is discarded and the distributed label-propagation
-    loop runs. Both paths are covered by tests and produce identical
-    frames.
-
-    ``pin_name`` (round 8): the short-circuit path executes the pair
-    plan exactly ONCE (inside the bounded collect), so pre-pinning the
-    pairs costs a parquet write+read for nothing; callers now pass the
-    UNPINNED plan plus a pin name, and the pin happens only on the
-    distributed branch, where the CC loop re-reads the edges every
-    round."""
-    head = pairs.select("doc_a", "doc_b").limit(CC_DRIVER_MAX_PAIRS + 1).collect()
+    The pair plan (typically the full LSH-band-join + verify) runs ONCE,
+    into a pin. ONE bounded collect (limit cap+1) from the pin sizes the
+    graph and, when it fits, delivers the edge list: at or below
+    CC_DRIVER_MAX_PAIRS a driver-side union-find resolves it (identical
+    min-id labels, none of the per-round job overhead); past the cap the
+    distributed label-propagation loop re-reads the pin every round.
+    Both paths are covered by tests and produce identical frames."""
+    pairs = _pin(pairs.select("doc_a", "doc_b"), "cc_pairs")
+    head = pairs.limit(CC_DRIVER_MAX_PAIRS + 1).collect()
     shortcircuit = len(head) <= CC_DRIVER_MAX_PAIRS
     if LAST_CC_STATS is not None:
         LAST_CC_STATS.update(
@@ -199,8 +190,6 @@ def keeper_frame(ids: DataFrame, pairs: DataFrame, pin_name: str | None = None) 
         ).select("doc_id", F.col("lab").alias("cluster_id"))
         endpoints = labs.select("doc_id")
     else:
-        if pin_name is not None:
-            pairs = _pin(pairs.select("doc_a", "doc_b"), pin_name)
         edges = pairs.union(
             pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
         ).toDF("src", "dst")
@@ -228,7 +217,7 @@ def q_cluster_keeper(spark, sf_dir):
     """
     pairs = q_minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     docs = read_spread(spark, f"{sf_dir}/documents.parquet").select("doc_id")
-    return keeper_frame(docs, pairs, pin_name="cc_pairs")
+    return keeper_frame(docs, pairs)
 
 
 def q_embedding_cluster_keeper(spark, sf_dir):
@@ -243,7 +232,7 @@ def q_embedding_cluster_keeper(spark, sf_dir):
     vecs = read_spread(spark, f"{sf_dir}/embeddings.parquet").select(
         F.col("vec_id").alias("doc_id")
     )
-    return keeper_frame(vecs, pairs, pin_name="emb_cc_pairs").select(
+    return keeper_frame(vecs, pairs).select(
         F.col("doc_id").alias("vec_id"), "cluster_id", "is_keeper", "cluster_size"
     )
 
@@ -273,7 +262,7 @@ FROM labs
 
 def q_simhash_pairs(spark, sf_dir):
     # pinned: the 28-bit signature HOF is the expensive leg and both
-    # self-join sides consume it (materialized table at bench/prod scale)
+    # self-join sides consume it
     sig = _pin(q_simhash(spark, sf_dir), "simhash_sig")
     mask = (1 << SIMHASH_BAND_BITS) - 1
     bands = sig.select(

@@ -14,6 +14,7 @@ signatures identical across engines).
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,20 +60,30 @@ def _doc_tokens(docs: DataFrame) -> DataFrame:
     return hoist(docs, ("doc_id",), t=norm_tokens("text"))
 
 
-def _pin(df: DataFrame, name: str) -> DataFrame:
-    """Pin an intermediate consumed by multiple downstream branches.
-
-    With ``SPARK_GRAFT_MATERIALIZE_DIR`` set (bench and production), the
-    frame is written to parquet and re-read — the literal 100-TB shape: a
-    signatures TABLE, recomputed never, spillable to disk, shareable
-    across jobs (the lineage machinery writes the same way). Unset (the
-    sf0.01 correctness gate), ``.cache()`` keeps the oracle runs cheap.
-    """
+def _pin_root(spark: SparkSession) -> str:
+    """``SPARK_GRAFT_MATERIALIZE_DIR`` when set (its owner keeps or removes
+    what lands there), else a per-application directory on the Hadoop
+    default filesystem that the driver JVM deletes when it exits."""
     base = os.environ.get("SPARK_GRAFT_MATERIALIZE_DIR")
-    if not base:
-        return df.cache()
-    path = os.path.join(base, name)
-    df.write.mode("overwrite").parquet(path)
+    if base:
+        return base.rstrip("/")
+    hfs = spark._jvm.org.apache.hadoop.fs
+    fs = hfs.FileSystem.get(spark._jsc.hadoopConfiguration())
+    root = fs.makeQualified(hfs.Path(f"/tmp/spark-graft-pins-{spark.sparkContext.applicationId}"))
+    fs.mkdirs(root)
+    fs.deleteOnExit(root)  # a set of paths: registering again is a no-op
+    return root.toString()
+
+
+def _pin(df: DataFrame, name: str) -> DataFrame:
+    """Pin an intermediate that several branches consume: write it once to
+    parquet at ``<root>/<name>/<unique token>`` and read it back — the
+    100-TB shape (a signatures TABLE, recomputed never, spillable). No
+    path is ever overwritten, so one plan may reach a pin name any number
+    of times. The v2 file-output committer (one rename per task) is set
+    on this write only; user-facing outputs keep the default v1."""
+    path = f"{_pin_root(df.sparkSession)}/{name}/{uuid.uuid4().hex}"
+    df.write.option("mapreduce.fileoutputcommitter.algorithm.version", "2").parquet(path)
     return df.sparkSession.read.parquet(path)
 
 
@@ -252,7 +263,7 @@ def q_minhash_signature(spark, sf_dir):
     collapses the projections — 8x the work. The explode+groupBy shape
     hashes each shingle exactly once and is also the 10^12-doc shape:
     one shuffle keyed by doc_id with map-side partial min. The hashed
-    (doc_id, h) stream is PINNED (materialized at bench/prod scale) so
+    (doc_id, h) stream is PINNED (a parquet table) so
     the hot-hash count and the anti-join each read int64 pairs — hashing
     runs exactly once. Hot shingles (df > SHINGLE_DF_CAP) are capped in
     the 28-bit HASH domain, which is the domain the permutations operate

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ._io import read_spread
+from .dedup import _pin
 from ..functions.text import (
     SQL_NORM_TOKENS,
     SQL_SHINGLE_HASH32,
@@ -687,7 +688,7 @@ def train_quality_probe(feat: DataFrame) -> list[int]:
 
 
 def q_train_quality_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feat = _qp_features(_docs(spark, sf_dir)).localCheckpoint()
+    feat = _pin(_qp_features(_docs(spark, sf_dir)), "qp_features")
     w = train_quality_probe(feat)
     score = F.expr(_qp_score_expr(w))
     return feat.select(

@@ -30,10 +30,7 @@ def resolve_clusters(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     component resolution with the adaptive driver-side union-find
     short-circuit for small pair sets — so the user-facing pipeline and
     the driver queries share one resolution code path."""
-    return keeper_frame(
-        docs.select("doc_id"), pairs.select("doc_a", "doc_b"),
-        pin_name="pipeline_cc_pairs",
-    )
+    return keeper_frame(docs.select("doc_id"), pairs.select("doc_a", "doc_b"))
 
 
 def dedupe_corpus(

@@ -51,22 +51,15 @@ def build_session(
         # instead of preserving parallelism on tiny shuffles). At scale
         # partitions above the advisory never coalesce, so this only
         # removes minimum-size task overhead; the advisory is
-        # parameterized for cluster tuning. Local effect (with the v2
-        # committer below): within window noise — paired in-session A/B
-        # median ratio ~1.02 (OPTIMIZATION_r08.md) — kept on the scale
-        # argument, not a claimed local win.
+        # parameterized for cluster tuning. Local effect: within window
+        # noise — paired in-session A/B median ratio ~1.02
+        # (OPTIMIZATION_r08.md) — kept on the scale argument, not a
+        # claimed local win.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m"),
         )
-        # v2 file-output commit: task outputs move to the destination at
-        # task commit (one rename) instead of the v1 two-phase job-commit
-        # rename cascade — the standard fast path on HDFS-like stores;
-        # the signature-table pins are write-then-read-back in one job,
-        # where v1's extra safety buys nothing (lineage is table
-        # metadata, not a write).
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))

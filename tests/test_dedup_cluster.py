@@ -4,7 +4,13 @@ shape)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import time
+
 import pyspark.sql.functions as F
+import pytest
 
 from ocr_endpoint_project_spark.operators.cluster import (
     HAMMING_K,
@@ -14,6 +20,7 @@ from ocr_endpoint_project_spark.operators.cluster import (
 )
 
 SF = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _cc(spark, n_vertices, edge_pairs):
@@ -127,6 +134,76 @@ def test_keeper_frame_driver_and_distributed_paths_agree(spark, monkeypatch):
     assert (1, 1, True, 4) in driver_path and (4, 1, False, 4) in driver_path
     assert (7, 7, True, 3) in driver_path
     assert (0, 0, True, 1) in driver_path  # singleton untouched
+
+
+@pytest.mark.parametrize("cap", [0, None], ids=["distributed", "driver"])
+def test_keeper_frame_runs_pair_plan_once(spark, monkeypatch, cap):
+    """The pair plan (at scale the whole LSH band-join + verify) is
+    evaluated once per pair row on both keeper branches: it is pinned
+    before the bounded collect, and the collect and the CC loop read the
+    pin."""
+    import ocr_endpoint_project_spark.operators.cluster as cl
+
+    if cap is not None:
+        monkeypatch.setattr(cl, "CC_DRIVER_MAX_PAIRS", cap)
+    edges = [(1, 2), (2, 3), (3, 4), (7, 8), (8, 9), (7, 9)]
+    evals = spark.sparkContext.accumulator(0)
+
+    def counted(pair):
+        evals.add(1)
+        return pair
+
+    pairs = spark.createDataFrame(
+        spark.sparkContext.parallelize(edges, 2).map(counted), "doc_a long, doc_b long"
+    )
+    ids = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
+    out = cl.keeper_frame(ids, pairs).collect()
+    assert len(out) == 12
+    assert evals.value == len(edges)
+
+
+def test_default_pin_root_removed_at_exit(tmp_path):
+    """Without SPARK_GRAFT_MATERIALIZE_DIR, pins land in a per-application
+    directory that the driver JVM deletes when it exits — here without a
+    spark.stop()."""
+    script = tmp_path / "pin_once.py"
+    script.write_text(
+        "from urllib.parse import urlparse\n"
+        "from ocr_endpoint_project_spark.operators.dedup import _pin, _pin_root\n"
+        "from ocr_endpoint_project_spark.session import build_session\n"
+        "spark = build_session(app_name='pin-exit', master='local[1]', shuffle_partitions=1)\n"
+        "pinned = _pin(spark.range(10), 'probe')\n"
+        "assert pinned.count() == 10\n"
+        "root = urlparse(_pin_root(spark)).path\n"
+        "assert all(urlparse(f).path.startswith(root + '/probe/') for f in pinned.inputFiles())\n"
+        "print('PIN_ROOT', root)\n"
+    )
+    env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_DRIVER_MEM="1g")
+    env.pop("SPARK_GRAFT_MATERIALIZE_DIR", None)
+    res = subprocess.run(
+        [sys.executable, str(script)], capture_output=True, text=True, timeout=300, env=env
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    root = [l.split(" ", 1)[1] for l in res.stdout.splitlines() if l.startswith("PIN_ROOT ")][0]
+    assert root.startswith("/tmp/spark-graft-pins-")
+    # the JVM may still be running its shutdown hooks after python exits
+    deadline = time.time() + 60
+    while os.path.exists(root) and time.time() < deadline:
+        time.sleep(0.5)
+    assert not os.path.exists(root)
+
+
+def test_hoist_intermediate_name_avoids_caller_columns(spark):
+    """A caller column named like hoist's intermediate struct survives
+    untouched; a name both kept and computed is refused, not duplicated."""
+    from ocr_endpoint_project_spark.functions.text import hoist
+
+    df = spark.createDataFrame([(1, "a b", 7)], "doc_id long, text string, _hoisted int")
+    out = hoist(df, ("doc_id", "_hoisted"), toks=F.split("text", " "))
+    assert out.columns == ["doc_id", "_hoisted", "toks"]
+    assert [tuple(r) for r in out.collect()] == [(1, 7, ["a", "b"])]
+    with pytest.raises(ValueError):
+        hoist(df, ("doc_id", "text"), TEXT=F.lower("text"))
 
 
 def test_dedupe_corpus_end_to_end(spark):

@@ -37,3 +37,14 @@ def test_queries_have_oracles_or_documented_gap(spark):
 def test_all_oracles_match(spark):
     failed = check([], sf_dir=SF_SMALL, spark=spark)
     assert not failed, f"oracle mismatches: {failed}"
+
+
+def test_pinned_ann_queries_under_materialize_dir(spark, tmp_path, monkeypatch):
+    """With a caller-owned SPARK_GRAFT_MATERIALIZE_DIR, one plan reaches
+    the ``ivf_assigned``, ``ann_truth`` and ``srp_sig`` pins from several
+    call sites; each call gets its own path, so no pin is replaced while
+    an earlier read in the same plan still lists its files."""
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_DIR", str(tmp_path))
+    failed = check(["ann_recall_at_k", "ann_tuning_table"], sf_dir=SF_SMALL, spark=spark)
+    assert not failed, f"oracle mismatches: {failed}"
+    assert len(list((tmp_path / "ivf_assigned").iterdir())) >= 2

@@ -6,14 +6,20 @@ Usage: python tools/check_oracles.py [--json OUT.json] [name ...]
 
 With --json, also writes a driver-style record per query:
 {name: {rows_match, schema_match, hash_match, spark_rows, oracle_rows, err}}
+
+Pinned intermediates are parquet here as everywhere (operators/dedup._pin),
+so the gate runs the plan shape the jobs run. They land under
+SPARK_GRAFT_MATERIALIZE_DIR when it is set, else in a per-application
+directory that is deleted when the JVM exits.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
