@@ -939,20 +939,19 @@ def q_ice_changelog(spark, sf_dir):
 
 
 def q_ice_source_read(spark, sf_dir):
-    """The icetable Python Data Source (sources/icetable_source.py) under
-    the oracle gate: two appends split by doc_id parity, read back via
-    spark.read.format('icetable') — the per-file InputPartition plan,
-    arrow-batch executor reads, hive partition reconstitution, and the
-    _commit_snapshot_id attribution are all on the hook for the hash."""
+    """The icetable incremental read (sources/icetable.py
+    incremental_scan from the start of history) under the oracle gate:
+    two appends split by doc_id parity, read back as one tagged scan —
+    file planning from the manifest diffs, hive partition
+    reconstitution, and the _commit_snapshot_id attribution are all on
+    the hook for the hash."""
     import hashlib
     import os
     import shutil
     import tempfile
 
     from ..sources.icetable import IceTable
-    from ..sources.icetable_source import register_icetable
 
-    register_icetable(spark)
     base = _docs(spark, sf_dir).select(
         "doc_id",
         F.pmod(F.col("doc_id"), F.lit(8)).cast("int").alias("part"),
@@ -966,16 +965,11 @@ def q_ice_source_read(spark, sf_dir):
     t = IceTable.create(tdir, partition_col="part", stat_cols=["doc_id"])
     t.append(base.filter(F.col("doc_id") % 2 == 0).repartition(8, "part"))
     t.append(base.filter(F.col("doc_id") % 2 == 1).repartition(8, "part"))
-    return (
-        spark.read.format("icetable")
-        .option("path", tdir)
-        .load()
-        .select(
-            "doc_id",
-            "part",
-            "text_len",
-            F.col("_commit_snapshot_id").alias("commit_snapshot_id"),
-        )
+    return t.incremental_scan(spark, from_snapshot_id=None).select(
+        "doc_id",
+        "part",
+        "text_len",
+        F.col("_commit_snapshot_id").alias("commit_snapshot_id"),
     )
 
 

@@ -648,14 +648,19 @@ class IceTable:
         return self.commit_overwrite(self.stage_overwrite(df), extra_summary)
 
     def commit_overwrite(
-        self, entries: list[dict], extra_summary: dict | None = None
+        self, entries: list[dict], extra_summary: dict | None = None, replace=()
     ) -> dict:
-        """Phase 2: publish staged entries as one overwrite snapshot."""
-        touched = {e["partition"] for e in entries}
+        """Phase 2: publish staged entries as one overwrite snapshot that
+        replaces their partitions and the partitions in ``replace``.  With
+        no entries it commits only the summary (and the replacements)."""
+        touched = {e["partition"] for e in entries} | set(replace)
 
         def build(meta: dict, seq: int, token: str):
-            name = f"manifest-{seq}-{token}-0.json"
-            self._wj(os.path.join(self.meta_dir, name), entries)
+            added = []
+            if entries:
+                name = f"manifest-{seq}-{token}-0.json"
+                self._wj(os.path.join(self.meta_dir, name), entries)
+                added = [{"name": name, **self._manifest_summary(entries)}]
             kept: list[dict] = []
             k = 1
             for m in self._current_manifest_names(meta):
@@ -673,7 +678,7 @@ class IceTable:
             summary["replaced_partitions"] = sorted(touched)
             if extra_summary:
                 summary.update(extra_summary)
-            return kept + [{"name": name, **self._manifest_summary(entries)}], summary
+            return kept + added, summary
 
         return self._commit("overwrite", build)
 
@@ -796,36 +801,36 @@ class IceTable:
         """
         meta = self.metadata()
         files = self.plan_files(snapshot_id, as_of_ms, partition_values, stats_ranges)
-        pcol = meta["partition_col"]
-        schema = None
-        if meta.get("schema") is not None:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(meta["schema"])
         if not files:
-            if schema is not None:
-                return spark.createDataFrame([], schema)
+            if meta.get("schema") is not None:
+                from pyspark.sql.types import StructType
+
+                return spark.createDataFrame([], StructType.fromJson(meta["schema"]))
             return spark.range(0).drop("id")
+        return self._read_files(spark, meta, [e["path"] for e in files])
+
+    def _read_files(self, spark: SparkSession, meta: dict, paths, *extra) -> DataFrame:
+        """Read table-relative data file ``paths`` in the table's column
+        order, plus the ``extra`` columns (which may name ``_metadata``)."""
+        from pyspark.sql.types import StructType
+
+        pcol = meta["partition_col"]
         reader = spark.read
-        if schema is not None:
+        cols = None
+        if meta.get("schema") is not None:
             # table schema from METADATA (schema evolution): old files
             # missing later-added columns read back as NULLs. The
             # partition column is NOT part of the data files — it comes
             # from the hive-style paths — so the reader schema excludes
             # it and the stored column order is restored afterwards.
-            from pyspark.sql.types import StructType
-
-            data_schema = StructType([f for f in schema.fields if f.name != pcol])
-            reader = reader.schema(data_schema)
+            fields = StructType.fromJson(meta["schema"]).fields
+            reader = reader.schema(StructType([f for f in fields if f.name != pcol]))
+            cols = [f.name for f in fields]
         if pcol is not None:
             # basePath makes Spark reconstitute pcol from hive-style dirs
             reader = reader.option("basePath", self.data_dir)
-        out = reader.parquet(
-            *[os.path.join(self.table_dir, e["path"]) for e in files]
-        )
-        if schema is not None:
-            out = out.select(*[f.name for f in schema.fields])
-        return out
+        out = reader.parquet(*[os.path.join(self.table_dir, p) for p in paths])
+        return out.select(*(cols or out.columns), *extra)
 
     # -- incremental / CDC read path --------------------------------------
 
@@ -932,55 +937,34 @@ class IceTable:
     def _read_tagged(
         self, spark: SparkSession, meta: dict, files, with_change_type: bool
     ) -> DataFrame:
-        """Union per-(snapshot[, change]) file groups, each tagged with
-        literal metadata columns.  One read per group — groups are file
-        LISTS, so Spark still parallelizes within each."""
+        """One parquet read of every listed file, tagged by a broadcast
+        join of each row's ``_metadata.file_name`` against the driver's
+        small file -> (snapshot[, change]) map.  A file listed under two
+        tags (added by one snapshot, removed by a later one) comes back
+        once per tag.  Data file names are unique within a table
+        (sequence, stage token, counter), and matching on the name avoids
+        ``_metadata.file_path``, where Spark escapes the already-escaped
+        hive partition directories a second time."""
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-        pcol = meta["partition_col"]
-        schema = (
-            StructType.fromJson(meta["schema"]) if meta.get("schema") else None
-        )
-
-        def empty():
-            fields = list(schema.fields) if schema else []
-            fields.append(StructField("_commit_snapshot_id", LongType()))
-            if with_change_type:
-                fields.append(StructField("_change_type", StringType()))
-            return spark.createDataFrame([], StructType(fields))
-
+        tag_fields = [StructField("_commit_snapshot_id", LongType())]
+        if with_change_type:
+            tag_fields.append(StructField("_change_type", StringType()))
         if not files:
-            return empty()
-        groups: dict[tuple, list[dict]] = {}
-        for rec in files:
-            key, e = rec[:-1], rec[-1]
-            groups.setdefault(key, []).append(e)
-        parts = []
-        for key in sorted(groups):
-            reader = spark.read
-            if schema is not None:
-                data_schema = StructType(
-                    [f for f in schema.fields if f.name != pcol]
-                )
-                reader = reader.schema(data_schema)
-            if pcol is not None:
-                reader = reader.option("basePath", self.data_dir)
-            df = reader.parquet(
-                *[os.path.join(self.table_dir, e["path"]) for e in groups[key]]
-            )
-            if schema is not None:
-                df = df.select(*[f.name for f in schema.fields])
-            df = df.withColumn(
-                "_commit_snapshot_id", F.lit(int(key[0])).cast("long")
-            )
-            if with_change_type:
-                df = df.withColumn("_change_type", F.lit(key[1]))
-            parts.append(df)
-        out = parts[0]
-        for df in parts[1:]:
-            out = out.unionByName(df)
-        return out
+            fields = StructType.fromJson(meta["schema"]).fields if meta.get("schema") else []
+            return spark.createDataFrame([], StructType(list(fields) + tag_fields))
+        df = self._read_files(
+            spark,
+            meta,
+            sorted({rec[-1]["path"] for rec in files}),
+            F.col("_metadata.file_name").alias("_file"),
+        )
+        tags = spark.createDataFrame(
+            [(os.path.basename(rec[-1]["path"]), *rec[:-1]) for rec in files],
+            StructType([StructField("_file", StringType())] + tag_fields),
+        )
+        return df.join(F.broadcast(tags), "_file").drop("_file")
 
     # -- maintenance ------------------------------------------------------
 

@@ -4,13 +4,10 @@ pipeline/dedupe.py).
 
 At 100-TB scale a corpus is never deduplicated once — new crawl batches
 arrive forever, and each batch must be deduplicated BOTH against itself
-AND against everything already kept. The scale shape is a persistent
-SIGNATURE STATE TABLE (doc_id, hashed shingle set, MinHash signature):
-per micro-batch, only the batch's signatures are computed fresh, the
-band-bucket join against state is keyed (never all-pairs), and only
-verified-unique documents append to the output AND to the state — so
-state stays one row per kept document, exactly the batch path's
-one-keeper-per-cluster invariant, maintained incrementally.
+AND against everything already kept. Per batch, only the batch's
+signatures are computed fresh, the band-bucket join against the kept
+documents is keyed (never all-pairs), and only verified-unique documents
+are kept — one keeper per cluster, maintained incrementally.
 
 Semantics: a batch document is a duplicate if its verified Jaccard
 (hashed-shingle sets, threshold JACCARD_THRESHOLD) reaches any KEPT
@@ -19,27 +16,27 @@ its own batch (first-seen-wins — the incremental analog of the batch
 keeper's min-doc_id rule; the two agree whenever batch arrival order
 respects doc_id order, which the equivalence test pins).
 
-Replay/commit discipline mirrors streaming/incremental.py: the state
-append carries ``batch_id``; a replayed micro-batch whose batch_id is
-already in state is skipped entirely (idempotent). The keeper OUTPUT is
-itself replay-safe (round-5 fix): keepers land in a batch_id-partitioned
-layout written with dynamic partition overwrite, so a crash between the
-output write and the state append replays the batch and REPLACES its
-output partition instead of appending duplicates to the one table whose
-contract is uniqueness. The signature-state append remains the commit
-point (written last).
+Storage is two icetables (sources/icetable.py), both partitioned by the
+string ``batch_key`` (the ``stream_extract`` pattern):
 
-Cross-batch hot-shingle state (round-5, closing the documented r4 blind
-spot): a persistent ``(h, df, batch_id)`` table at ``state_dir +
-"_shingle_df"`` accumulates per-batch shingle document frequencies. Each
-batch's signatures are capped against the CUMULATIVE df (prior state +
-this batch), so a shingle cool within every micro-batch but hot across
-thousands of them is still dropped from the signature/banding leg —
-without this, many small batches re-open the O(df^2) band-join blowup
-the batch path's ``_cap_hashed`` closed. The verify leg keeps FULL
-shingle sets, exactly like the batch path. Rows are keyed by batch_id,
-so a replayed append deduplicates on read; the table grows with distinct
-shingles and is compactable with jobs/compact_job (aggregate + rewrite).
+* the KEEPER table at ``table_dir``, columns ``doc_id, text, hs,
+  mh0..mhN, batch_id, batch_key``: the deduplicated output and, at the
+  same time, the signature state every later batch is checked against;
+* the SHINGLE table at ``table_dir + "_shingle_df"``, columns ``h, df,
+  batch_key``: per-batch shingle document frequencies. Each batch's
+  signatures are capped against the CUMULATIVE df, so a shingle cool
+  within every micro-batch but hot across thousands of them is still
+  dropped from the banding leg — without this, many small batches
+  re-open the O(df^2) band-join blowup the batch path's ``_cap_hashed``
+  closed. The verify leg keeps FULL shingle sets, like the batch path.
+
+One commit point per batch (:func:`dedupe_batch`): the batch's shingle
+rows are written first, by an overwrite of its own partition (a replay
+replaces them), then its keepers and its summary publish in ONE
+keeper-table snapshot — also when it keeps nothing. A batch whose key is
+already in the keeper table's snapshot log is skipped.
+:func:`compact_shingle_df_state` folds the committed batches' shingle
+partitions into one, in one overwrite snapshot.
 """
 
 from __future__ import annotations
@@ -59,6 +56,8 @@ from ..operators.dedup import (
     _shingles,
 )
 from ..functions.text import shingle_hash32
+from ..sources.icetable import IceTable
+from .incremental import BATCH_KEY
 
 _SIG_COLS = [f"mh{i}" for i in range(len(MINHASH_PERMS))]
 
@@ -172,21 +171,117 @@ def _verified_dup_ids(batch_sig: DataFrame, state_sig: DataFrame | None) -> Data
     )
 
 
+def shingle_table_dir(table_dir: str) -> str:
+    """Where the shingle-frequency table of keeper table ``table_dir`` lives."""
+    return table_dir.rstrip("/") + "_shingle_df"
+
+
+def _open(table_dir: str, stat_cols: list[str]) -> IceTable:
+    try:
+        return IceTable.load(table_dir)
+    except FileNotFoundError:
+        return IceTable.create(table_dir, partition_col=BATCH_KEY, stat_cols=stat_cols)
+
+
+def _batch_summaries(keepers: IceTable) -> list[dict]:
+    """Summaries of the committed dedup batches still in the snapshot log."""
+    return [s["summary"] for s in keepers.snapshots() if BATCH_KEY in s["summary"]]
+
+
+def dedupe_batch(
+    spark: SparkSession,
+    table_dir: str,
+    docs: DataFrame,
+    batch_id: int,
+    key: str,
+    extra_summary: dict | None = None,
+) -> dict | None:
+    """Deduplicate one batch of ``(doc_id, text)`` documents against
+    itself and every kept document, and commit it under ``key``.
+
+    The keeper snapshot's summary holds ``batch_key``, ``batch_id``,
+    ``docs_in``, ``keepers``, ``dups`` and ``extra_summary``; it is
+    returned, or None when ``key`` is already committed (a replay)."""
+    keepers = _open(table_dir, ["doc_id"])
+    shingles = _open(shingle_table_dir(table_dir), [])
+    if any(s[BATCH_KEY] == key for s in _batch_summaries(keepers)):
+        return None
+    state = (
+        keepers.scan(spark).select("doc_id", "hs", *_SIG_COLS)
+        if keepers.snapshots()
+        else None
+    )
+    docs = docs.select("doc_id", "text").persist()
+    counts = (
+        _doc_tokens(docs)
+        .select(
+            "doc_id",
+            F.explode(
+                F.array_distinct(
+                    F.transform(_shingles(F.col("t")), lambda s: shingle_hash32(s))
+                )
+            ).alias("h"),
+        )
+        .groupBy("h")
+        .agg(F.count(F.lit(1)).alias("df"))
+    )
+    # this batch's df rows replace a crashed attempt's, so the cumulative
+    # df below counts every live batch exactly once
+    shingles.overwrite_partitions(counts.withColumn(BATCH_KEY, F.lit(key)))
+    hot = (
+        shingles.scan(spark)
+        .groupBy("h")
+        .agg(F.sum("df").alias("df"))
+        .filter(F.col("df") > _dedup.SHINGLE_DF_CAP)
+        .select("h")
+    )
+    sig = signature_frame(docs, hot=hot).persist()
+    kept = sig.join(_verified_dup_ids(sig, state), "doc_id", "left_anti")
+    entries = keepers.stage_overwrite(
+        docs.join(kept, "doc_id")
+        .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+        .withColumn(BATCH_KEY, F.lit(key))
+    )
+    docs_in = docs.count()
+    n_kept = sum(e["rows"] for e in entries)
+    summary = {
+        BATCH_KEY: key,
+        "batch_id": int(batch_id),
+        "docs_in": docs_in,
+        "keepers": n_kept,
+        "dups": docs_in - n_kept,
+        **(extra_summary or {}),
+    }
+    keepers.commit_overwrite(entries, extra_summary=summary)
+    sig.unpersist()
+    docs.unpersist()
+    return summary
+
+
 def stream_dedupe(
     spark: SparkSession,
     input_dir: str,
-    out_dir: str,
+    table_dir: str,
     checkpoint_dir: str,
-    state_dir: str,
     schema: str = "doc_id long, text string",
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Start the incremental dedup stream: parquet documents in ->
-    deduplicated keepers out, with the signature state table at
-    ``state_dir`` growing by exactly the kept rows of each batch."""
-    docs = spark.readStream.schema(schema).parquet(input_dir)
+    """Start the incremental dedup stream over a parquet directory: each
+    micro-batch is one :func:`dedupe_batch` under the key ``"{query
+    id}-{batch id}"``, so a query restarted on a fresh checkpoint never
+    collides with the keys of an earlier one; Spark's file-stream
+    checkpoint records which input files were consumed."""
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
+        )
+        dedupe_batch(spark, table_dir, batch_df, batch_id, f"{query_id}-{batch_id}")
+
     writer = (
-        docs.writeStream.foreachBatch(make_batch_handler(spark, out_dir, state_dir))
+        spark.readStream.schema(schema)
+        .parquet(input_dir)
+        .writeStream.foreachBatch(_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
@@ -195,208 +290,89 @@ def stream_dedupe(
     return writer.start()
 
 
-def stream_dedupe_icetable(
-    spark: SparkSession,
-    table_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    state_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Incremental dedup fed by an ICETABLE instead of a directory: the
-    ``icetable`` data source (sources/icetable_source.py) turns the
-    table's snapshot log into the offset axis, so each committed append
-    becomes exactly one dedup micro-batch and a restarted query resumes
-    at the last processed snapshot via Spark's checkpoint. This is the
-    production shape for "dedupe a continuously-ingested corpus table":
-    the ingest side appends snapshots, the dedup side consumes them
-    exactly once — no file-listing race, no shared directory contract.
+def stream_dedupe_icetable(spark: SparkSession, source_dir: str, table_dir: str) -> dict:
+    """Deduplicate a continuously-appended icetable of ``(doc_id, text)``
+    documents: one :func:`dedupe_batch` per source snapshot newer than the
+    last ``source_snapshot_id`` committed to the keeper table, each over
+    ``IceTable.incremental_scan`` of just that snapshot. The keeper
+    snapshot records the source snapshot it consumed, so the commit point
+    is the resume point — no Spark checkpoint — and the reads go through
+    the JVM parquet reader on any Hadoop filesystem.
 
-    The table must carry ``doc_id``/``text`` columns; everything else
-    (partition column, ``_commit_snapshot_id``) is dropped before the
-    batch handler so state/output schemas match :func:`stream_dedupe`.
-    """
-    from ..sources.icetable_source import register_icetable
-
-    register_icetable(spark)
-    docs = (
-        spark.readStream.format("icetable")
-        .option("path", table_dir)
-        .load()
-        .select("doc_id", "text")
-    )
-    writer = (
-        docs.writeStream.foreachBatch(make_batch_handler(spark, out_dir, state_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-COMPACTED_BATCH_ID = -1  # sentinel for folded rows in the shingle-df state
-
-
-def _recover_compaction_swap(spark: SparkSession, df_state_dir: str) -> None:
-    """If a compaction crashed between moving the live shingle-df dir
-    aside and moving the new one into place (dst missing, dst_old
-    present), restore the aside copy so no reader ever sees an
-    empty-state window."""
-    jvm = spark._jvm
-    dst = jvm.org.apache.hadoop.fs.Path(df_state_dir)
-    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
-    old = jvm.org.apache.hadoop.fs.Path(df_state_dir + "_old")
-    if not fs.exists(dst) and fs.exists(old):
-        fs.rename(old, dst)
+    Raises on a non-append source snapshot, and when the keeper table has
+    commits but none records a ``source_snapshot_id`` (its history was
+    expired, or another feed filled it): restarting from the first source
+    snapshot would deduplicate the kept documents against themselves.
+    Returns ``batches``, ``docs_in``, ``keepers``, ``dups`` of this call
+    and the last consumed ``source_snapshot_id``."""
+    source = IceTable.load(source_dir)
+    keepers = _open(table_dir, ["doc_id"])
+    consumed = [
+        s["source_snapshot_id"]
+        for s in _batch_summaries(keepers)
+        if "source_snapshot_id" in s
+    ]
+    if keepers.snapshots() and not consumed:
+        raise ValueError(
+            f"keeper table {table_dir} has commits but no recorded "
+            "source_snapshot_id; cannot tell which source snapshots it consumed"
+        )
+    prev = consumed[-1] if consumed else None
+    stats = {"batches": 0, "docs_in": 0, "keepers": 0, "dups": 0}
+    for snap in source.snapshots():
+        sid = snap["snapshot_id"]
+        if prev is not None and sid <= prev:
+            continue
+        summary = dedupe_batch(
+            spark,
+            table_dir,
+            source.incremental_scan(spark, prev, sid),
+            sid,
+            f"snapshot-{sid}",
+            {"source_snapshot_id": sid},
+        )
+        stats["batches"] += 1
+        for k in ("docs_in", "keepers", "dups"):
+            stats[k] += summary[k]
+        prev = sid
+    stats["source_snapshot_id"] = prev
+    return stats
 
 
-def compact_shingle_df_state(spark: SparkSession, state_dir: str) -> dict:
-    """Fold the append-only ``(h, df, batch_id)`` shingle-frequency state
-    into one row per shingle, bounding its growth at O(distinct shingles)
-    instead of O(batches x shingles-per-batch).
+_FOLDED = "folded"  # batch key of the folded shingle-frequency partition
 
-    Only rows whose batch_id is COMMITTED (present in the signature
-    state, or already folded) are compacted: an uncommitted batch's rows
-    may be re-appended by a crash replay, and folding them first would
-    double-count when replay-dedup on (batch_id, h) no longer sees the
-    original rows. Uncommitted rows are carried through verbatim.
-    Returns {"rows_before", "rows_after"}."""
-    from pyspark.errors import AnalysisException
 
-    df_state_dir = state_dir.rstrip("/") + "_shingle_df"
-    _recover_compaction_swap(spark, df_state_dir)
+def compact_shingle_df_state(spark: SparkSession, table_dir: str) -> dict:
+    """Fold the shingle partitions of every COMMITTED batch (its key is in
+    the keeper table's snapshot log, also when it kept nothing) and the
+    previous fold into one ``folded`` partition, bounding the table at
+    O(distinct shingles) instead of O(batches x shingles per batch).
+
+    The fold is one overwrite snapshot, so a crash before its commit
+    leaves the table as it was. Partitions of uncommitted batches are
+    left alone: a replay of such a batch replaces its partition, which
+    a fold would have summed away. Returns ``rows_before``/``rows_after``
+    (from manifest row counts)."""
     try:
-        df_state = spark.read.parquet(df_state_dir)
-    except AnalysisException:
+        shingles = IceTable.load(shingle_table_dir(table_dir))
+        done = {s[BATCH_KEY] for s in _batch_summaries(IceTable.load(table_dir))}
+    except FileNotFoundError:
         return {"rows_before": 0, "rows_after": 0}
-    try:
-        committed = {
-            r["batch_id"]
-            for r in spark.read.parquet(state_dir).select("batch_id").distinct().collect()
-        }
-    except AnalysisException:
-        committed = set()
-    committed.add(COMPACTED_BATCH_ID)
-    rows_before = df_state.count()
-    clean = df_state.dropDuplicates(["batch_id", "h"])
-    foldable = clean.filter(F.col("batch_id").isin(list(committed)))
-    carried = clean.filter(~F.col("batch_id").isin(list(committed)))
-    folded = (
-        foldable.groupBy("h")
-        .agg(F.sum("df").alias("df"))
-        .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
-    )
-    out = folded.unionByName(carried.select("h", "df", "batch_id"))
-    # write-swap via a temp dir (Hadoop FS API, so file:/hdfs:/s3a: all
-    # work — same round-5 rule as jobs/compact_job): the state is never
-    # half-rewritten in place
-    tmp = df_state_dir + "_compacting"
-    out.write.mode("overwrite").parquet(tmp)
-    rows_after = spark.read.parquet(tmp).count()
-    # swap order (round-6 fix): rename the live dir ASIDE first, then the
-    # new dir into place, then delete the old copy — a crash at any point
-    # leaves either the live dir or the _old copy on disk, never a window
-    # where the state is silently gone (the reader treats a missing dir
-    # as empty, which would degrade hot-shingle capping without error)
-    jvm = spark._jvm
-    dst = jvm.org.apache.hadoop.fs.Path(df_state_dir)
-    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
-    old = jvm.org.apache.hadoop.fs.Path(df_state_dir + "_old")
-    if fs.exists(old):  # leftover from a crash after a completed swap
-        fs.delete(old, True)
-    fs.rename(dst, old)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), dst)
-    fs.delete(old, True)
-    return {"rows_before": rows_before, "rows_after": rows_after}
-
-
-def make_batch_handler(spark: SparkSession, out_dir: str, state_dir: str):
-    """The per-micro-batch handler (exposed so the crash/replay window —
-    output written, state not yet — is directly testable)."""
-    from pyspark.errors import AnalysisException
-
-    df_state_dir = state_dir.rstrip("/") + "_shingle_df"
-
-    def _read_or_none(path: str) -> DataFrame | None:
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-                return None
-            raise
-
-    def _cumulative_df(batch_counts: DataFrame, batch_id: int) -> DataFrame:
-        """(h, df) cumulative document frequency: prior state + batch.
-        Prior rows deduplicate on (batch_id, h), and rows carrying THIS
-        batch_id are excluded entirely: a crashed attempt writes its df
-        rows before the commit point, so on replay the recomputed
-        ``batch_counts`` already covers them — unioning both would
-        double-count the batch and could flip near-cap shingles hot only
-        on replay, breaking stream==batch equivalence (round-6 fix)."""
-        _recover_compaction_swap(spark, df_state_dir)
-        prior = _read_or_none(df_state_dir)
-        if prior is None:
-            return batch_counts
-        prior = (
-            prior.filter(F.col("batch_id") != batch_id)
-            .dropDuplicates(["batch_id", "h"])
-            .select("h", "df")
-        )
-        return (
-            batch_counts.unionByName(prior).groupBy("h").agg(F.sum("df").alias("df"))
-        )
-
-    def _handle(batch_df, batch_id: int) -> None:
-        state = _read_or_none(state_dir)
-        if state is not None and state.filter(F.col("batch_id") == batch_id).limit(1).count():
-            return  # checkpoint replay of a committed batch — idempotent skip
-        batch_df = batch_df.persist()
-        # per-batch shingle df, then the CUMULATIVE hot set (state + batch):
-        # a shingle cool in every batch but hot across them still gets capped
-        batch_counts = (
-            _doc_tokens(batch_df).select(
-                "doc_id",
-                F.explode(
-                    F.array_distinct(
-                        F.transform(
-                            _shingles(F.col("t")), lambda s: shingle_hash32(s)
-                        )
-                    )
-                ).alias("h"),
-            )
+    files = shingles.plan_files()
+    fold = {e["partition"] for e in files if e["partition"] in done | {_FOLDED}}
+    if fold - {_FOLDED}:
+        folded = (
+            shingles.scan(spark, partition_values=fold)
             .groupBy("h")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .persist()
+            .agg(F.sum("df").alias("df"))
+            .withColumn(BATCH_KEY, F.lit(_FOLDED))
         )
-        hot = _cumulative_df(batch_counts, batch_id).filter(
-            F.col("df") > _dedup.SHINGLE_DF_CAP
-        ).select("h")
-        sig = signature_frame(batch_df, hot=hot).persist()
-        dups = _verified_dup_ids(
-            sig, state.drop("batch_id") if state is not None else None
+        shingles.commit_overwrite(
+            shingles.stage_overwrite(folded),
+            extra_summary={"folded_partitions": len(fold)},
+            replace=fold,
         )
-        keepers = sig.join(dups, "doc_id", "left_anti")
-        # replay-safe output: each batch owns one partition, written with
-        # dynamic overwrite — a replayed batch REPLACES its partition
-        (
-            batch_df.join(keepers.select("doc_id"), "doc_id", "left_semi")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        # df state BEFORE the commit point; replay dedupes on (batch_id, h)
-        batch_counts.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(df_state_dir)
-        # commit point: state appended only after the keeper write returned
-        keepers.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            state_dir
-        )
-        sig.unpersist()
-        batch_counts.unpersist()
-        batch_df.unpersist()
-
-    return _handle
+    return {
+        "rows_before": sum(e["rows"] for e in files),
+        "rows_after": sum(e["rows"] for e in shingles.plan_files()),
+    }

@@ -3,6 +3,12 @@ from __future__ import annotations
 import pytest
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: spark-submit subprocess tests (minutes each)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from ocr_endpoint_project_spark.session import build_session

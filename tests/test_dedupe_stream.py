@@ -1,16 +1,25 @@
-"""Incremental streaming dedup: per-batch MinHash signatures against a
-persistent signature state table must reproduce the batch dedup's keeper
-set when batches arrive in doc_id order, drop cross-batch duplicates,
-and stay idempotent under replay."""
+"""Incremental streaming dedup: per-batch MinHash signatures against the
+keeper icetable must reproduce the batch dedup's keeper set when batches
+arrive in doc_id order, drop cross-batch duplicates, and stay idempotent
+under replay and crashes before a commit."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_endpoint_project_spark.sources.icetable import IceTable
 from ocr_endpoint_project_spark.streaming import stream_dedupe
+from ocr_endpoint_project_spark.streaming.dedupe_stream import (
+    compact_shingle_df_state,
+    dedupe_batch,
+    shingle_table_dir,
+    signature_frame,
+)
 
 pytestmark = pytest.mark.usefixtures("spark")
+
+SCHEMA = "doc_id long, text string"
 
 
 def _vocab_text(prefix: str, n: int = 40) -> str:
@@ -36,32 +45,76 @@ BATCH2 = [
 
 
 def _write_batch(spark, path: str, rows) -> None:
-    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
+    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(path)
 
 
 def _run(spark, tmp_path) -> dict[str, str]:
-    dirs = {k: str(tmp_path / k) for k in ("in", "out", "ckpt", "state")}
+    dirs = {k: str(tmp_path / k) for k in ("in", "out", "ckpt")}
     _write_batch(spark, dirs["in"], BATCH1)
-    q = stream_dedupe(spark, dirs["in"], dirs["out"], dirs["ckpt"], dirs["state"])
+    q = stream_dedupe(spark, dirs["in"], dirs["out"], dirs["ckpt"])
     q.awaitTermination(120)
     _write_batch(spark, dirs["in"], BATCH2)
-    q = stream_dedupe(spark, dirs["in"], dirs["out"], dirs["ckpt"], dirs["state"])
+    q = stream_dedupe(spark, dirs["in"], dirs["out"], dirs["ckpt"])
     q.awaitTermination(120)
     return dirs
 
 
+def _kept(spark, table_dir: str) -> set:
+    return {r["doc_id"] for r in IceTable.load(table_dir).scan(spark).collect()}
+
+
+def _cum_df(spark, table_dir: str) -> dict:
+    """Cumulative shingle df (h -> df) over every live batch."""
+    return {
+        r["h"]: r["df"]
+        for r in IceTable.load(shingle_table_dir(table_dir))
+        .scan(spark)
+        .groupBy("h")
+        .agg(F.sum("df").alias("df"))
+        .collect()
+    }
+
+
+def _shingle_partitions(table_dir: str) -> set:
+    return {e["partition"] for e in IceTable.load(shingle_table_dir(table_dir)).plan_files()}
+
+
+def _batch(spark, table_dir: str, rows, batch_id: int):
+    return dedupe_batch(
+        spark, table_dir, spark.createDataFrame(rows, SCHEMA), batch_id, f"t-{batch_id}"
+    )
+
+
+def _crash_before_cas(monkeypatch, table_dir: str) -> None:
+    """Make ``commit_overwrite`` of the table at ``table_dir`` raise: its
+    data files are staged, its snapshot is never published."""
+    orig = IceTable.commit_overwrite
+
+    def crash(self, *a, **k):
+        if self.table_dir == table_dir:
+            raise RuntimeError("crash before CAS")
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(IceTable, "commit_overwrite", crash)
+
+
 def test_stream_dedupe_keeps_first_seen(spark, tmp_path):
     dirs = _run(spark, tmp_path)
-    kept = {r["doc_id"] for r in spark.read.parquet(dirs["out"]).collect()}
+    table = IceTable.load(dirs["out"])
     # in-batch dup 2 and 13 dropped; cross-batch dup 11 dropped
-    assert kept == {1, 5, 12}
-    # state carries exactly the kept signatures, tagged by batch
-    state = spark.read.parquet(dirs["state"])
-    assert {r["doc_id"] for r in state.collect()} == {1, 5, 12}
+    assert _kept(spark, dirs["out"]) == {1, 5, 12}
+    # the keeper table is also the signature state, tagged by batch
+    state = table.scan(spark)
+    assert {"hs", *_sig_cols()} <= set(state.columns)
     assert state.filter(F.col("batch_id") == 0).count() == 2
     assert state.filter(F.col("batch_id") == 1).count() == 1
+    # one snapshot per batch, with its counts
+    got = [
+        (s["summary"]["batch_id"], s["summary"]["docs_in"], s["summary"]["keepers"],
+         s["summary"]["dups"])
+        for s in table.snapshots()
+    ]
+    assert got == [(0, 3, 2, 1), (1, 3, 1, 2)]
 
 
 def test_stream_dedupe_matches_batch_keepers(spark, tmp_path):
@@ -71,26 +124,30 @@ def test_stream_dedupe_matches_batch_keepers(spark, tmp_path):
     from ocr_endpoint_project_spark.pipeline.dedupe import dedupe_corpus
 
     dirs = _run(spark, tmp_path)
-    stream_kept = {r["doc_id"] for r in spark.read.parquet(dirs["out"]).collect()}
-
-    docs = spark.createDataFrame(BATCH1 + BATCH2, "doc_id long, text string")
+    docs = spark.createDataFrame(BATCH1 + BATCH2, SCHEMA)
     batch_kept = {
         r["doc_id"]
         for r in dedupe_corpus(docs, pairs=minhash_lsh_pairs(docs)).collect()
     }
-    assert stream_kept == batch_kept
+    assert _kept(spark, dirs["out"]) == batch_kept
 
 
 def test_stream_dedupe_replay_idempotent(spark, tmp_path):
-    """Re-triggering with no new input appends nothing (checkpoint), and
-    a replayed batch_id already in state is skipped entirely."""
+    """Re-triggering with no new input commits nothing (checkpoint), and
+    a replayed batch whose key is already committed is skipped whole."""
     dirs = _run(spark, tmp_path)
-    n_out = spark.read.parquet(dirs["out"]).count()
-    n_state = spark.read.parquet(dirs["state"]).count()
-    q = stream_dedupe(spark, dirs["in"], dirs["out"], dirs["ckpt"], dirs["state"])
+    table = IceTable.load(dirs["out"])
+    n_snaps = len(table.snapshots())
+    n_shingle_snaps = len(IceTable.load(shingle_table_dir(dirs["out"])).snapshots())
+    q = stream_dedupe(spark, dirs["in"], dirs["out"], dirs["ckpt"])
     q.awaitTermination(120)
-    assert spark.read.parquet(dirs["out"]).count() == n_out
-    assert spark.read.parquet(dirs["state"]).count() == n_state
+    assert len(table.snapshots()) == n_snaps
+    key = table.snapshots()[-1]["summary"]["batch_key"]
+    replay = dedupe_batch(spark, dirs["out"], spark.createDataFrame(BATCH2, SCHEMA), 1, key)
+    assert replay is None
+    assert len(table.snapshots()) == n_snaps
+    assert len(IceTable.load(shingle_table_dir(dirs["out"])).snapshots()) == n_shingle_snaps
+    assert table.scan(spark).count() == 3
 
 
 def _sig_cols():
@@ -100,22 +157,15 @@ def _sig_cols():
 
 
 def test_stream_dedupe_cross_batch_hot_shingle_capped(spark, tmp_path, monkeypatch):
-    """Round 5: a shingle COOL within every batch (df 2 <= cap 3) but HOT
+    """A shingle COOL within every batch (df 2 <= cap 3) but HOT
     cumulatively (df 4 after two batches) must be dropped from later
-    batches' signature legs — the persistent (h, df) state closes the r4
-    per-batch blind spot that re-opened the O(df^2) band blowup under
-    many small micro-batches."""
-    from pyspark.sql import functions as F
-
+    batches' signature legs — the shingle table closes the per-batch
+    blind spot that re-opens the O(df^2) band blowup under many small
+    micro-batches."""
     from ocr_endpoint_project_spark.operators import dedup
-    from ocr_endpoint_project_spark.streaming.dedupe_stream import (
-        make_batch_handler,
-        signature_frame,
-    )
 
     monkeypatch.setattr(dedup, "SHINGLE_DF_CAP", 3)
-    dirs = {k: str(tmp_path / k) for k in ("out", "state")}
-    handler = make_batch_handler(spark, dirs["out"], dirs["state"])
+    tdir = str(tmp_path / "out")
 
     # shared prefix sized so half of each doc's shingles are shared
     # (capping them must move the minhash) while pairwise Jaccard
@@ -123,262 +173,204 @@ def test_stream_dedupe_cross_batch_hot_shingle_capped(spark, tmp_path, monkeypat
     prefix = " ".join(f"common{k}" for k in range(16))
     mk = lambda i: (i, prefix + " " + " ".join(f"u{i}w{j}" for j in range(10)))
     b0, b1 = [mk(1), mk(2)], [mk(3), mk(4)]
-    schema = "doc_id long, text string"
-    handler(spark.createDataFrame(b0, schema), 0)
-    handler(spark.createDataFrame(b1, schema), 1)
+    _batch(spark, tdir, b0, 0)
+    _batch(spark, tdir, b1, 1)
 
-    # df state: prefix shingles reach cumulative df 4 > cap 3
-    df_state = spark.read.parquet(dirs["state"] + "_shingle_df")
+    # df state: prefix shingles reach cumulative df 4 > cap 3...
+    df_state = IceTable.load(shingle_table_dir(tdir)).scan(spark)
     cum = df_state.groupBy("h").agg(F.sum("df").alias("df"))
     hot = cum.filter(F.col("df") > 3).select("h")
     assert hot.count() > 0, "shared prefix shingles must be cumulatively hot"
-    # and each hot shingle was cool (df <= 3) within every single batch
+    # ...and each hot shingle was cool (df <= 3) within every single batch
     assert df_state.filter(F.col("df") > 3).count() == 0
 
-    state = spark.read.parquet(dirs["state"])
+    state = IceTable.load(tdir).scan(spark)
     cols = ["doc_id"] + _sig_cols()
 
     def rows(df):
         return {tuple(r) for r in df.select(*cols).collect()}
 
     # batch-0 signatures were computed before the shingles turned hot
-    uncapped0 = signature_frame(spark.createDataFrame(b0, schema))
+    uncapped0 = signature_frame(spark.createDataFrame(b0, SCHEMA))
     assert rows(state.filter(F.col("batch_id") == 0)) == rows(uncapped0)
     # batch-1 signatures exclude the cumulatively-hot shingles...
-    capped1 = signature_frame(spark.createDataFrame(b1, schema), hot=hot)
+    capped1 = signature_frame(spark.createDataFrame(b1, SCHEMA), hot=hot)
     assert rows(state.filter(F.col("batch_id") == 1)) == rows(capped1)
     # ...and genuinely differ from what the uncapped path would produce
-    uncapped1 = signature_frame(spark.createDataFrame(b1, schema))
+    uncapped1 = signature_frame(spark.createDataFrame(b1, SCHEMA))
     assert rows(state.filter(F.col("batch_id") == 1)) != rows(uncapped1)
 
 
-def test_stream_dedupe_output_survives_crash_before_commit(spark, tmp_path):
-    """Round 5: the keeper output is batch_id-partitioned and written
-    with dynamic overwrite, so a crash BETWEEN the output write and the
-    state append (simulated: state wiped after the handler ran) replays
-    the batch and REPLACES its partition — no duplicate keepers in the
-    one table whose contract is uniqueness."""
-    import shutil
+def test_stream_dedupe_output_survives_crash_before_commit(spark, tmp_path, monkeypatch):
+    """A crash after the batch's shingle rows committed and its keepers
+    were staged, but before the keeper CAS, publishes nothing; rerunning
+    the batch gives exactly a single clean run's keepers and cumulative
+    df, with no duplicate rows."""
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    for rows, bid in ((BATCH1, 0), (BATCH2, 1)):
+        _batch(spark, clean, rows, bid)
 
-    from pyspark.sql import functions as F
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="crash before CAS"):
+        _crash_before_cas(m, crashed)
+        _batch(spark, crashed, BATCH1, 0)
+    table = IceTable.load(crashed)
+    assert table.snapshots() == []  # nothing published...
+    assert list(table.io.list_files(table.data_dir))  # ...though data was staged
+    _batch(spark, crashed, BATCH1, 0)  # the rerun
+    _batch(spark, crashed, BATCH2, 1)
 
-    from ocr_endpoint_project_spark.streaming.dedupe_stream import make_batch_handler
+    cols = ["doc_id", "batch_id", *_sig_cols()]
 
-    dirs = {k: str(tmp_path / k) for k in ("out", "state")}
-    handler = make_batch_handler(spark, dirs["out"], dirs["state"])
-    schema = "doc_id long, text string"
-    b0 = spark.createDataFrame(BATCH1, schema)
+    def keeper_rows(d):
+        return sorted(tuple(r) for r in IceTable.load(d).scan(spark).select(*cols).collect())
 
-    handler(b0, 0)
-    first = spark.read.parquet(dirs["out"])
-    kept_ids = {r["doc_id"] for r in first.collect()}
-    assert kept_ids == {1, 5}
-
-    # crash window: output + df-state written, signature state was not
-    shutil.rmtree(dirs["state"])
-    handler(b0, 0)  # checkpoint replays the batch
-
-    replayed = spark.read.parquet(dirs["out"])
-    assert {r["doc_id"] for r in replayed.collect()} == {1, 5}
-    assert replayed.count() == len(kept_ids)  # replaced, not appended
-    # df state deduplicates the double append on (batch_id, h): cumulative
-    # counts equal a single clean run's
-    df_state = spark.read.parquet(dirs["state"] + "_shingle_df")
-    assert df_state.count() > df_state.dropDuplicates(["batch_id", "h"]).count()
-    cum = (
-        df_state.dropDuplicates(["batch_id", "h"])
-        .groupBy("h")
-        .agg(F.sum("df").alias("df"))
-    )
-    assert cum.filter(F.col("df") > 2).count() == 0  # 3 docs, max df 2
-
-    # the stream continues cleanly: batch 1 still dedups against state
-    handler(spark.createDataFrame(BATCH2, schema), 1)
-    final = {r["doc_id"] for r in spark.read.parquet(dirs["out"]).collect()}
-    assert final == {1, 5, 12}
+    assert keeper_rows(crashed) == keeper_rows(clean)
+    assert len(keeper_rows(crashed)) == len(set(keeper_rows(crashed))) == 3
+    assert _kept(spark, crashed) == {1, 5, 12}
+    assert _cum_df(spark, crashed) == _cum_df(spark, clean)
+    shingles = IceTable.load(shingle_table_dir(crashed)).scan(spark)
+    assert shingles.count() == shingles.dropDuplicates(["h", "batch_key"]).count()
 
 
 def test_shingle_df_state_compaction(spark, tmp_path):
-    """Round 5: the append-only (h, df, batch_id) state folds to one row
-    per shingle — but ONLY committed batches fold; an uncommitted
-    batch's rows are carried verbatim so a crash replay's (batch_id, h)
-    dedup still sees them. Cumulative counts are identical before and
-    after, and the stream keeps running correctly on the compacted
-    state."""
-    from pyspark.sql import functions as F
-
-    from ocr_endpoint_project_spark.streaming.dedupe_stream import (
-        COMPACTED_BATCH_ID,
-        compact_shingle_df_state,
-        make_batch_handler,
-    )
-
-    dirs = {k: str(tmp_path / k) for k in ("out", "state")}
-    handler = make_batch_handler(spark, dirs["out"], dirs["state"])
-    schema = "doc_id long, text string"
-    handler(spark.createDataFrame(BATCH1, schema), 0)
-    handler(spark.createDataFrame(BATCH2, schema), 1)
-    df_dir = dirs["state"] + "_shingle_df"
-
-    def cum():
-        return {
-            r["h"]: r["s"]
-            for r in spark.read.parquet(df_dir)
-            .dropDuplicates(["batch_id", "h"])
-            .groupBy("h")
-            .agg(F.sum("df").alias("s"))
-            .collect()
-        }
-
-    before = cum()
-    # simulate an UNCOMMITTED batch 2: df rows appended, signature state not
-    uncommitted = spark.createDataFrame([(999, 7, 2)], "h long, df long, batch_id int")
-    uncommitted.write.mode("append").parquet(df_dir)
+    """The per-batch shingle partitions fold into one — but ONLY committed
+    batches fold; an uncommitted batch's partition is kept so its replay
+    replaces it instead of being double counted. Cumulative counts are
+    identical before and after, and the stream keeps running correctly
+    on the folded state."""
+    tdir = str(tmp_path / "out")
+    _batch(spark, tdir, BATCH1, 0)
+    _batch(spark, tdir, BATCH2, 1)
+    before = _cum_df(spark, tdir)
+    # an UNCOMMITTED batch 2: shingle rows written, keepers never committed
+    uncommitted = spark.createDataFrame([(999, 7, "t-2")], "h long, df long, batch_key string")
+    shingles = IceTable.load(shingle_table_dir(tdir))
+    shingles.overwrite_partitions(uncommitted)
     before[999] = 7
 
-    stats = compact_shingle_df_state(spark, dirs["state"])
+    stats = compact_shingle_df_state(spark, tdir)
     assert stats["rows_after"] < stats["rows_before"]
-    after_df = spark.read.parquet(df_dir)
-    assert cum() == before  # cumulative counts preserved exactly
-    # committed rows folded to the sentinel; the uncommitted row survives
-    ids = {r["batch_id"] for r in after_df.select("batch_id").distinct().collect()}
-    assert ids == {COMPACTED_BATCH_ID, 2}
-    # replay of the uncommitted batch's df append still dedups correctly
-    uncommitted.write.mode("append").parquet(df_dir)
-    assert cum() == before
+    assert _cum_df(spark, tdir) == before  # cumulative counts preserved exactly
+    # committed partitions folded; the uncommitted one survives
+    assert _shingle_partitions(tdir) == {"folded", "t-2"}
+    # a replay of the uncommitted batch replaces its partition
+    shingles.overwrite_partitions(uncommitted)
+    assert _cum_df(spark, tdir) == before
 
-    # the stream continues on compacted state: new batch dedups vs state
-    handler(spark.createDataFrame([(21, BATCH1[0][1] + " x")], schema), 3)
-    kept = {r["doc_id"] for r in spark.read.parquet(dirs["out"]).collect()}
-    assert 21 not in kept  # near-dup of doc 1, caught against state
+    # the stream continues on the folded state: a new batch dedups vs state
+    _batch(spark, tdir, [(21, BATCH1[0][1] + " x")], 3)
+    assert 21 not in _kept(spark, tdir)  # near-dup of doc 1, caught against state
+
+
+def test_shingle_df_fold_covers_zero_keeper_batches(spark, tmp_path):
+    """A batch of pure duplicates keeps nothing but still commits one
+    keeper snapshot, so the fold counts it as committed and leaves no
+    per-batch shingle partition behind for it."""
+    tdir = str(tmp_path / "out")
+    _batch(spark, tdir, [(1, _vocab_text("alpha"))], 0)
+    summary = _batch(spark, tdir, [(2, _near_dup(_vocab_text("alpha")))], 1)
+    assert (summary["keepers"], summary["dups"]) == (0, 1)
+    assert [s["summary"]["batch_key"] for s in IceTable.load(tdir).snapshots()] == [
+        "t-0",
+        "t-1",
+    ]
+    assert _shingle_partitions(tdir) == {"t-0", "t-1"}
+    before = _cum_df(spark, tdir)
+
+    compact_shingle_df_state(spark, tdir)
+    assert _shingle_partitions(tdir) == {"folded"}
+    assert _cum_df(spark, tdir) == before
+    assert _kept(spark, tdir) == {1}
 
 
 def test_stream_dedupe_replay_shingle_df_not_double_counted(
     spark, tmp_path, monkeypatch
 ):
-    """Round 6 (ADVICE): a crash-replayed batch's df rows are already in
-    the shingle-df state (written before the commit point); the replay
-    recomputes the same counts, and unioning BOTH would double the
-    batch's df — flipping near-cap shingles hot only on replay and
-    producing different signatures than a clean run. The cumulative-df
-    builder must exclude prior rows carrying the replayed batch_id."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
+    """A crashed batch's shingle rows are already committed when it is
+    rerun; counting them AND the rerun's rows would double the batch's df,
+    flipping near-cap shingles hot only on the rerun and producing other
+    signatures than a clean run. The rerun replaces its own partition."""
     from ocr_endpoint_project_spark.operators import dedup
-    from ocr_endpoint_project_spark.streaming.dedupe_stream import (
-        make_batch_handler,
-        signature_frame,
-    )
 
     # 3 docs share a prefix -> prefix shingle df 3 == cap 3 (cool in a
-    # clean run); the bug would see 3 prior + 3 recomputed = 6 > 3 (hot)
+    # clean run); a double count would see 6 > 3 (hot)
     monkeypatch.setattr(dedup, "SHINGLE_DF_CAP", 3)
-    dirs = {k: str(tmp_path / k) for k in ("out", "state")}
-    handler = make_batch_handler(spark, dirs["out"], dirs["state"])
+    tdir = str(tmp_path / "out")
     prefix = " ".join(f"common{k}" for k in range(16))
     mk = lambda i: (i, prefix + " " + " ".join(f"u{i}w{j}" for j in range(10)))
-    schema = "doc_id long, text string"
-    b0 = spark.createDataFrame([mk(1), mk(2), mk(3)], schema)
+    b0 = [mk(1), mk(2), mk(3)]
 
-    handler(b0, 0)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="crash before CAS"):
+        _crash_before_cas(m, tdir)
+        _batch(spark, tdir, b0, 0)
+    _batch(spark, tdir, b0, 0)  # the rerun
+
     cols = ["doc_id"] + _sig_cols()
     rows = lambda df: {tuple(r) for r in df.select(*cols).collect()}
-    clean = rows(spark.read.parquet(dirs["state"]))
-
-    # crash window: output + df rows written, signature state not
-    shutil.rmtree(dirs["state"])
-    handler(b0, 0)  # replay
-
-    replayed = rows(spark.read.parquet(dirs["state"]))
-    assert replayed == clean
     # the clean run's signatures are the UNCAPPED ones (df == cap is cool)
-    assert replayed == rows(signature_frame(b0))
-    # sanity: df cumulative counts also match a single clean run
-    cum = (
-        spark.read.parquet(dirs["state"] + "_shingle_df")
-        .dropDuplicates(["batch_id", "h"])
-        .groupBy("h")
-        .agg(F.sum("df").alias("df"))
+    assert rows(IceTable.load(tdir).scan(spark)) == rows(
+        signature_frame(spark.createDataFrame(b0, SCHEMA))
     )
-    assert cum.filter(F.col("df") > 3).count() == 0
+    assert max(_cum_df(spark, tdir).values()) == 3
 
 
-def test_shingle_df_compaction_swap_crash_recovery(spark, tmp_path):
-    """Round 6 (ADVICE): the compaction swap renames the live dir ASIDE
-    before moving the new one in — a crash between the two steps leaves
-    a recoverable ``_old`` copy, and readers restore it instead of
-    silently treating the state as empty (which would degrade
-    hot-shingle capping without any error)."""
-    import os
+def test_shingle_df_fold_crash_before_cas(spark, tmp_path, monkeypatch):
+    """The fold is one overwrite snapshot: a crash after it staged the
+    folded rows, before its CAS, leaves the shingle table as it was, and
+    rerunning the fold completes it."""
+    tdir = str(tmp_path / "out")
+    _batch(spark, tdir, BATCH1, 0)
+    shingles = IceTable.load(shingle_table_dir(tdir))
+    n_snaps = len(shingles.snapshots())
+    before = _cum_df(spark, tdir)
 
-    from pyspark.sql import functions as F
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="crash before CAS"):
+        _crash_before_cas(m, shingle_table_dir(tdir))
+        compact_shingle_df_state(spark, tdir)
+    assert len(shingles.snapshots()) == n_snaps
+    assert _shingle_partitions(tdir) == {"t-0"}
+    assert _cum_df(spark, tdir) == before
 
-    from ocr_endpoint_project_spark.streaming.dedupe_stream import (
-        compact_shingle_df_state,
-        make_batch_handler,
-    )
-
-    dirs = {k: str(tmp_path / k) for k in ("out", "state")}
-    handler = make_batch_handler(spark, dirs["out"], dirs["state"])
-    schema = "doc_id long, text string"
-    handler(spark.createDataFrame(BATCH1, schema), 0)
-    df_dir = dirs["state"] + "_shingle_df"
-
-    def cum():
-        return {
-            r["h"]: r["s"]
-            for r in spark.read.parquet(df_dir)
-            .dropDuplicates(["batch_id", "h"])
-            .groupBy("h")
-            .agg(F.sum("df").alias("s"))
-            .collect()
-        }
-
-    before = cum()
-    # simulate the crash window: live dir moved aside, new dir never landed
-    os.rename(df_dir, df_dir + "_old")
-    stats = compact_shingle_df_state(spark, dirs["state"])  # recovers, then folds
-    assert stats["rows_before"] > 0
-    assert cum() == before
-    assert not os.path.exists(df_dir + "_old")
-
-    # same crash window, recovery via the batch handler's read path
-    os.rename(df_dir, df_dir + "_old")
-    handler(spark.createDataFrame(BATCH2, schema), 1)
-    kept = {r["doc_id"] for r in spark.read.parquet(dirs["out"]).collect()}
-    assert kept == {1, 5, 12}  # cross-batch dup 11 still caught
-    assert 999 not in cum()  # state restored, not re-created empty
+    compact_shingle_df_state(spark, tdir)
+    assert _shingle_partitions(tdir) == {"folded"}
+    assert _cum_df(spark, tdir) == before
+    _batch(spark, tdir, BATCH2, 1)
+    assert _kept(spark, tdir) == {1, 5, 12}  # cross-batch dup 11 still caught
 
 
 def test_stream_dedupe_from_icetable_matches_batch(spark, tmp_path):
-    """Dedup fed by the icetable data source: one committed append = one
-    micro-batch, checkpoint resumes at the last processed snapshot, and
-    the keeper set equals the batch path over the full corpus."""
+    """Dedup fed by an icetable: one batch per source snapshot, each call
+    resumes after the source_snapshot_id committed last, and the keeper
+    set equals the batch path over the full corpus."""
     from ocr_endpoint_project_spark.operators.dedup import minhash_lsh_pairs
     from ocr_endpoint_project_spark.pipeline.dedupe import dedupe_corpus
-    from ocr_endpoint_project_spark.sources.icetable import IceTable
     from ocr_endpoint_project_spark.streaming import stream_dedupe_icetable
 
-    tdir = str(tmp_path / "table")
-    dirs = {k: str(tmp_path / k) for k in ("out", "ckpt", "state")}
-    t = IceTable.create(tdir, partition_col=None, stat_cols=["doc_id"])
-    t.append(spark.createDataFrame(BATCH1, "doc_id long, text string"))
-    q = stream_dedupe_icetable(spark, tdir, dirs["out"], dirs["ckpt"], dirs["state"])
-    q.awaitTermination(120)
-    t.append(spark.createDataFrame(BATCH2, "doc_id long, text string"))
-    q = stream_dedupe_icetable(spark, tdir, dirs["out"], dirs["ckpt"], dirs["state"])
-    q.awaitTermination(120)
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    source = IceTable.create(src, partition_col=None, stat_cols=["doc_id"])
+    source.append(spark.createDataFrame(BATCH1, SCHEMA))
+    s1 = stream_dedupe_icetable(spark, src, out)
+    assert s1 == {"batches": 1, "docs_in": 3, "keepers": 2, "dups": 1, "source_snapshot_id": 1}
+    source.append(spark.createDataFrame(BATCH2[:1], SCHEMA))
+    source.append(spark.createDataFrame(BATCH2[1:], SCHEMA))
+    s2 = stream_dedupe_icetable(spark, src, out)
+    assert s2 == {"batches": 2, "docs_in": 3, "keepers": 1, "dups": 2, "source_snapshot_id": 3}
+    table = IceTable.load(out)
+    assert [s["summary"]["source_snapshot_id"] for s in table.snapshots()] == [1, 2, 3]
 
-    stream_kept = {r["doc_id"] for r in spark.read.parquet(dirs["out"]).collect()}
-    docs = spark.createDataFrame(BATCH1 + BATCH2, "doc_id long, text string")
+    docs = spark.createDataFrame(BATCH1 + BATCH2, SCHEMA)
     batch_kept = {
         r["doc_id"]
         for r in dedupe_corpus(docs, pairs=minhash_lsh_pairs(docs)).collect()
     }
-    assert stream_kept == batch_kept == {1, 5, 12}
-    # replay with nothing new: no growth
-    q = stream_dedupe_icetable(spark, tdir, dirs["out"], dirs["ckpt"], dirs["state"])
-    q.awaitTermination(120)
-    assert spark.read.parquet(dirs["out"]).count() == len(stream_kept)
+    assert _kept(spark, out) == batch_kept == {1, 5, 12}
+    # nothing new in the source: nothing committed
+    s3 = stream_dedupe_icetable(spark, src, out)
+    assert s3["batches"] == 0 and s3["source_snapshot_id"] == 3
+    assert len(table.snapshots()) == 3
+
+    # with the consumed ids expired from the keeper log, resuming would
+    # re-deduplicate the kept docs against themselves: refuse
+    table.expire_snapshots(keep_last=1)
+    with pytest.raises(ValueError, match="source_snapshot_id"):
+        stream_dedupe_icetable(spark, src, out)

@@ -386,6 +386,58 @@ def test_incremental_scan_reads_only_new_appends(spark, tmp_path):
     assert t.incremental_scan(spark, from_snapshot_id=None).count() == 180
 
 
+def test_incremental_scan_attributes_snapshots(spark, tmp_path):
+    """Read from the start of history, every row carries the snapshot
+    that added its file, next to the reconstituted partition column."""
+    t = IceTable.create(str(tmp_path / "t"), partition_col="part", stat_cols=["k"])
+    t.append(_df(spark, 0, 50))
+    t.append(_df(spark, 50, 80))
+    got = t.incremental_scan(spark, from_snapshot_id=None)
+    assert sorted(r.k for r in got.collect()) == list(range(80))
+    attr = {
+        r._commit_snapshot_id: r["count"]
+        for r in got.groupBy("_commit_snapshot_id").count().collect()
+    }
+    assert attr == {1: 50, 2: 30}
+    assert got.schema["part"].dataType.simpleString() == "int"
+    assert got.filter("k % 4 != part").count() == 0
+    assert got.drop("_commit_snapshot_id").subtract(t.scan(spark)).count() == 0
+
+
+def test_tagged_reads_are_one_scan(spark, tmp_path):
+    """incremental_scan / changelog_scan read every file in ONE parquet
+    scan and tag rows by file, also for hive-escaped partition values
+    and for a file listed under two tags (inserted, later deleted)."""
+    t = IceTable.create(str(tmp_path / "t"), partition_col="host", stat_cols=["k"])
+    hosts = ["a b/c:d", "x+y", "plain"]
+    snaps = [
+        t.append(
+            spark.createDataFrame(
+                [(i * 10 + j, h) for j, h in enumerate(hosts)], "k int, host string"
+            )
+        )["snapshot_id"]
+        for i in range(3)
+    ]
+    inc = t.incremental_scan(spark, from_snapshot_id=None)
+    plan = inc._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    got = {(r.k, r.host, r._commit_snapshot_id) for r in inc.collect()}
+    assert got == {
+        (i * 10 + j, h, snaps[i]) for i in range(3) for j, h in enumerate(hosts)
+    }
+
+    s4 = t.overwrite_partitions(
+        spark.createDataFrame([(99, "a b/c:d")], "k int, host string")
+    )["snapshot_id"]
+    ch = t.changelog_scan(spark, from_snapshot_id=None)
+    plan = ch._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    rows = {(r.k, r._change_type, r._commit_snapshot_id) for r in ch.collect()}
+    assert (0, "insert", snaps[0]) in rows and (0, "delete", s4) in rows
+    assert (99, "insert", s4) in rows
+    assert len(rows) == 9 + 3 + 1
+
+
 def test_incremental_scan_refuses_overwrites(spark, tmp_path):
     t = IceTable.create(str(tmp_path / "t"), partition_col="part", stat_cols=["k"])
     s1 = t.append(_df(spark, 0, 100))

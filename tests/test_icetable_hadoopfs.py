@@ -147,32 +147,33 @@ def test_string_partition_escaping_on_file_uri(spark, tmp_path):
     assert [r.k for r in got.collect()] == [1]
 
 
-def test_python_data_source_on_file_uri(spark, tmp_path):
-    """The python data source (pyarrow executor reads) normalizes
-    ``file:`` URIs to POSIX paths; other schemes raise the documented
-    NotImplementedError instead of a pyarrow parse failure."""
-    import pytest as _pytest
-
-    from ocr_endpoint_project_spark.sources.icetable_source import (
-        _local_path,
-        register_icetable,
+def test_stream_dedupe_icetable_on_file_uri(spark, tmp_path):
+    """The icetable-fed streaming dedup with source, keeper and shingle
+    tables on ``file:`` URIs: every read and commit goes through the
+    Hadoop FS client, as on hdfs:/s3a:, and a second call resumes after
+    the committed source snapshot."""
+    from ocr_endpoint_project_spark.streaming import stream_dedupe_icetable
+    from ocr_endpoint_project_spark.streaming.dedupe_stream import (
+        compact_shingle_df_state,
+        shingle_table_dir,
     )
 
-    assert _local_path("/plain") == "/plain"
-    assert _local_path("file:/tmp/t") == "/tmp/t"
-    assert _local_path("file:///tmp/t") == "/tmp/t"
-    with _pytest.raises(NotImplementedError):
-        _local_path("hdfs://nn/x")
+    text = " ".join(f"w{i}" for i in range(40))
+    src, out = "file:" + str(tmp_path / "src"), "file:" + str(tmp_path / "out")
+    source = IceTable.create(src, partition_col=None, stat_cols=["doc_id"])
+    source.append(spark.createDataFrame([(1, text), (2, "other words " * 10)], "doc_id long, text string"))
+    assert stream_dedupe_icetable(spark, src, out)["keepers"] == 2
+    source.append(spark.createDataFrame([(3, text + " x")], "doc_id long, text string"))
+    stats = stream_dedupe_icetable(spark, src, out)
+    assert (stats["batches"], stats["dups"], stats["source_snapshot_id"]) == (1, 1, 2)
 
-    register_icetable(spark)
-    tdir = "file:" + str(tmp_path / "t")
-    t = IceTable.create(tdir, partition_col="part", stat_cols=["k"])
-    t.append(_df(spark, 0, 40))
-    got = spark.read.format("icetable").option("path", tdir).load()
-    assert got.count() == 40
-    assert {r.k for r in got.filter("part = 2").collect()} == {
-        k for k in range(40) if k % 4 == 2
-    }
+    keepers = IceTable.load(out)
+    assert isinstance(keepers.io, _HadoopIO)
+    assert {r.doc_id for r in keepers.scan(spark).collect()} == {1, 2}
+    compact_shingle_df_state(spark, out)
+    shingles = IceTable.load(shingle_table_dir(out))
+    assert isinstance(shingles.io, _HadoopIO)
+    assert {e["partition"] for e in shingles.plan_files()} == {"folded"}
 
 
 def test_extract_sink_with_lineage_on_file_uri(spark, tmp_path):

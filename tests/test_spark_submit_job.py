@@ -155,14 +155,12 @@ def test_compact_job_file_uri_via_hadoop_fs(spark, tmp_path):
 
 
 def test_stream_dedupe_job_incremental_runs(spark, tmp_path):
-    """Round 5: the streaming-dedup job entry — two invocations over a
-    growing input dir continue from the checkpoint, keepers accumulate
-    replay-safe, and --compact-state folds the shingle-df table."""
-    from pyspark.sql import functions as F  # noqa: F401
-
+    """The streaming-dedup job entry: two invocations over a growing
+    input dir continue from the checkpoint, keepers accumulate in the
+    keeper icetable, and --compact-state folds the shingle-df table."""
     from jobs.stream_dedupe_job import run
 
-    dirs = {k: str(tmp_path / k) for k in ("in", "out", "ckpt", "state")}
+    dirs = {k: str(tmp_path / k) for k in ("in", "out", "ckpt")}
 
     def write(rows):
         spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.mode(
@@ -171,12 +169,11 @@ def test_stream_dedupe_job_incremental_runs(spark, tmp_path):
 
     base = " ".join(f"w{i}" for i in range(40))
     write([(1, base), (2, base + " x")])  # 2 is a near-dup of 1
-    s1 = run(spark, dirs["in"], dirs["out"], dirs["ckpt"], dirs["state"])
-    assert s1 == {"docs_in": 2, "keepers": 1, "state_rows": 1, "dups_dropped": 1}
+    s1 = run(spark, dirs["in"], dirs["out"], dirs["ckpt"])
+    assert s1 == {"docs_in": 2, "keepers": 1, "dups_dropped": 1}
 
     write([(3, base + " y"), (4, " ".join(f"z{i}" for i in range(40)))])
-    s2 = run(spark, dirs["in"], dirs["out"], dirs["ckpt"], dirs["state"],
-             compact_state=True)
+    s2 = run(spark, dirs["in"], dirs["out"], dirs["ckpt"], compact_state=True)
     # 3 dups against state; 4 is fresh
     assert s2["docs_in"] == 4 and s2["keepers"] == 2 and s2["dups_dropped"] == 2
     assert s2["state_compaction"]["rows_after"] <= s2["state_compaction"]["rows_before"]

@@ -80,8 +80,6 @@ def test_stream_callback_sink(spark, tmp_path):
     """S9/O10: each micro-batch's job summary rides in the snapshot that
     commits its rows, and the driver-side hook receives it after the
     commit."""
-    from ocr_endpoint_project_spark.sources.icetable_source import register_icetable
-
     in_dir = str(tmp_path / "in")
     table_dir = str(tmp_path / "table")
     ckpt = str(tmp_path / "ckpt")
@@ -119,12 +117,6 @@ def test_stream_callback_sink(spark, tmp_path):
     # the driver-side hook (the reference's webhook POST slot) received
     # the committed summaries, in order
     assert received == cbs
-    # the sink's output is readable by the icetable data source reader
-    register_icetable(spark)
-    via_reader = spark.read.format("icetable").option("path", table_dir).load()
-    assert sorted(r.url for r in via_reader.select("url").collect()) == sorted(
-        r.url for r in out.select("url").collect()
-    )
 
     # restart with no new input: no duplicate data, no new summaries
     n_cb = len(cbs)

@@ -29,6 +29,7 @@ def main() -> None:
     from ocr_endpoint_project_spark.operators.dedup import minhash_lsh_pairs
     from ocr_endpoint_project_spark.pipeline.dedupe import dedupe_corpus
     from ocr_endpoint_project_spark.session import build_session
+    from ocr_endpoint_project_spark.sources.icetable import IceTable
     from ocr_endpoint_project_spark.streaming import stream_dedupe
 
     spark = build_session(
@@ -53,7 +54,7 @@ def main() -> None:
     # streaming path: same docs split into 3 doc_id-ordered batches
     # (first-seen-wins == min-doc_id keeper when arrival respects id order)
     with tempfile.TemporaryDirectory() as tmp:
-        dirs = {k: os.path.join(tmp, k) for k in ("in", "out", "ckpt", "state")}
+        dirs = {k: os.path.join(tmp, k) for k in ("in", "out", "ckpt")}
         rows = docs.collect()
         third = (len(rows) + 2) // 3
         for i in range(3):
@@ -63,11 +64,11 @@ def main() -> None:
             spark.createDataFrame(chunk, docs.schema).coalesce(1).write.mode(
                 "append"
             ).parquet(dirs["in"])
-            q = stream_dedupe(spark, dirs["in"], dirs["out"], dirs["ckpt"], dirs["state"])
+            q = stream_dedupe(spark, dirs["in"], dirs["out"], dirs["ckpt"])
             q.awaitTermination(300)
         stream_kept = sorted(
             r["doc_id"]
-            for r in spark.read.parquet(dirs["out"]).select("doc_id").collect()
+            for r in IceTable.load(dirs["out"]).scan(spark).select("doc_id").collect()
         )
 
     def checksum(ids: list[int]) -> str:
