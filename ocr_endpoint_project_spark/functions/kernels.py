@@ -55,9 +55,10 @@ def extract_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     task_pid = ctx.partitionId() if ctx is not None else -1
     for batch in iterator:
         n = len(batch)
-        # logical partition_id (pmod(xxhash64(url), P), data-derived and
-        # stable across runs — the lineage/resume key) is passed through;
-        # fall back to the physical task partition when absent
+        # logical partition_id (pmod(hash(xxhash64(url)), P): the salted
+        # exchange's own bucket, so it equals this task's partition; the
+        # lineage/resume key) is passed through; fall back to the task
+        # partition when absent
         pid = batch["partition_id"] if "partition_id" in batch else task_pid
         out = {
             "url": batch["url"],

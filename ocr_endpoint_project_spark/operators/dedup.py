@@ -19,7 +19,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._io import read_spread
+from ._io import app_temp_root, read_spread
 from ..functions.text import (
     SQL_NORM_TOKENS,
     SQL_SHINGLE_HASH32,
@@ -67,12 +67,7 @@ def _pin_root(spark: SparkSession) -> str:
     base = os.environ.get("SPARK_GRAFT_MATERIALIZE_DIR")
     if base:
         return base.rstrip("/")
-    hfs = spark._jvm.org.apache.hadoop.fs
-    fs = hfs.FileSystem.get(spark._jsc.hadoopConfiguration())
-    root = fs.makeQualified(hfs.Path(f"/tmp/spark-graft-pins-{spark.sparkContext.applicationId}"))
-    fs.mkdirs(root)
-    fs.deleteOnExit(root)  # a set of paths: registering again is a no-op
-    return root.toString()
+    return app_temp_root(spark, "pins")
 
 
 def _pin(df: DataFrame, name: str) -> DataFrame:

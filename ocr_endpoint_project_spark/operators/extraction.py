@@ -20,7 +20,7 @@ from ..functions.kernels import (
     token_wer_udf,
     word_metrics_udf,
 )
-from ._io import read_spread
+from ._io import read_spread, scratch_dir
 from ..functions.text import SQL_CER, SQL_NORM_TOKENS, r4, sql_r4
 from ..pipeline.extract import run_extraction
 from ..sources.pages import pages_from_documents
@@ -609,17 +609,9 @@ def q_warc_roundtrip(spark, sf_dir):
 
 
 def _warc_dir_stage(spark, sf_dir, n_segments: int = 8) -> str:
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_warc_dir_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(stage, ignore_errors=True)
-    os.makedirs(stage, exist_ok=True)
+    stage = scratch_dir(spark, "warc_dir")
 
     def _write(it):
         from datetime import datetime, timedelta, timezone
@@ -803,11 +795,6 @@ FROM documents
 
 
 def q_ice_time_travel(spark, sf_dir):
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.icetable import IceTable
 
     base = _docs(spark, sf_dir).select(
@@ -815,11 +802,7 @@ def q_ice_time_travel(spark, sf_dir):
         F.pmod(F.col("doc_id"), F.lit(8)).cast("int").alias("part"),
         F.length("text").cast("long").alias("text_len"),
     )
-    tdir = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_ice_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(tdir, ignore_errors=True)
+    tdir = scratch_dir(spark, "ice_time_travel")
     t = IceTable.create(tdir, partition_col="part", stat_cols=["doc_id"])
     s1 = t.append(base.repartition(8, "part"))
     patch = base.filter(F.col("part").isin(1, 3)).withColumn(
@@ -849,11 +832,6 @@ def q_ice_schema_evolution(spark, sf_dir):
     half), so a wrong fill (dropped rows, misaligned columns, old schema
     winning) breaks the hash. r6 VERDICT next-round #8: this promotes
     the pytest-only evolution coverage to the driver's oracle record."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.icetable import IceTable
 
     docs = _docs(spark, sf_dir)
@@ -865,11 +843,7 @@ def q_ice_schema_evolution(spark, sf_dir):
         "doc_id", part, F.length("text").cast("long").alias("text_len"),
         F.col("lang").alias("lang_code"),
     )
-    tdir = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_iceevo_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(tdir, ignore_errors=True)
+    tdir = scratch_dir(spark, "ice_schema_evolution")
     t = IceTable.create(tdir, partition_col="part", stat_cols=["doc_id"])
     t.append(old_half.repartition(8, "part"))
     t.append(new_half.repartition(8, "part"))
@@ -906,11 +880,6 @@ def q_ice_changelog(spark, sf_dir):
     snapshot. The oracle rebuilds both images from the documents table,
     so a diff bug (stale manifest counted as added, a kept file reported
     removed) breaks the hash."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.icetable import IceTable
 
     base = _docs(spark, sf_dir).select(
@@ -918,11 +887,7 @@ def q_ice_changelog(spark, sf_dir):
         F.pmod(F.col("doc_id"), F.lit(8)).cast("int").alias("part"),
         F.length("text").cast("long").alias("text_len"),
     )
-    tdir = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_icecdc_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(tdir, ignore_errors=True)
+    tdir = scratch_dir(spark, "ice_changelog")
     t = IceTable.create(tdir, partition_col="part", stat_cols=["doc_id"])
     s1 = t.append(base.repartition(8, "part"))
     patch = base.filter(F.col("part").isin(1, 3)).withColumn(
@@ -945,11 +910,6 @@ def q_ice_source_read(spark, sf_dir):
     file planning from the manifest diffs, hive partition
     reconstitution, and the _commit_snapshot_id attribution are all on
     the hook for the hash."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.icetable import IceTable
 
     base = _docs(spark, sf_dir).select(
@@ -957,11 +917,7 @@ def q_ice_source_read(spark, sf_dir):
         F.pmod(F.col("doc_id"), F.lit(8)).cast("int").alias("part"),
         F.length("text").cast("long").alias("text_len"),
     )
-    tdir = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_icesrc_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(tdir, ignore_errors=True)
+    tdir = scratch_dir(spark, "ice_source_read")
     t = IceTable.create(tdir, partition_col="part", stat_cols=["doc_id"])
     t.append(base.filter(F.col("doc_id") % 2 == 0).repartition(8, "part"))
     t.append(base.filter(F.col("doc_id") % 2 == 1).repartition(8, "part"))

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.icetable import IceTable
-from .extract import DEFAULT_PARTITIONS, run_extraction
+from .extract import DEFAULT_PARTITIONS, PARTITION_ID_RULE, run_extraction
 
 STATUS_SUCCEEDED = "succeeded"
 
@@ -89,6 +89,22 @@ def ice_done_partitions(table: IceTable) -> list[int]:
     and any bookkeeping can never lose or double-count a partition.
     """
     return sorted(_live_partitions(table.plan_files()))
+
+
+def _refuse_other_partitioning(table: IceTable, num_partitions: int) -> None:
+    """Raise ``ValueError`` when a live partition of ``table`` was written
+    under another id rule or partition count than this run assigns (or
+    records no rule, as tables written before it was recorded): resuming
+    would skip ids that name other urls and commit duplicates."""
+    for e in table.plan_files():
+        lin = e.get("lineage", {})
+        written = (lin.get("partition_id_rule"), lin.get("partitions_total"))
+        if written != (PARTITION_ID_RULE, num_partitions):
+            raise ValueError(
+                f"{table.table_dir}: partition {e['partition']} was written with "
+                f"(rule, partitions) = {written}, this run assigns "
+                f"{(PARTITION_ID_RULE, num_partitions)}; extract into a new table"
+            )
 
 
 def stage_lineage(
@@ -179,20 +195,26 @@ def run_with_lineage_ice(
     dynamic partition overwrite, and the run's LINEAGE RIDES IN THE
     COMMIT: the snapshot summary holds the run's (run id, doc/ok/failed/
     byte counts, total cost, an order-insensitive checksum-of-checksums,
-    wall-clock bracket, ``partitions_total``), and each partition's
-    manifest entry holds that partition's :func:`lineage_rows` row with
-    the run's wall-clock bracket, ``partitions_total`` and ``status``
+    wall-clock bracket, ``partitions_total``, ``partition_id_rule``),
+    and each partition's manifest entry holds that partition's
+    :func:`lineage_rows` row with the run's wall-clock bracket,
+    ``partitions_total``, ``partition_id_rule`` and ``status``
     (``plan_files()[i]["lineage"]``), so it lives exactly as long as the
     partition's files. Data and lineage publish ATOMICALLY in the same
     CAS — there is no window where one exists without the other. The
     flow is stage -> one collect of the lineage of the staged files
     (:func:`stage_lineage`, shared with the streaming sink) -> commit; a
-    crash before the commit leaves only unreferenced files.
+    crash before the commit leaves only unreferenced files. The salted
+    exchange is the only shuffle before the write: each extraction task
+    holds exactly one ``partition_id`` (``extract.salted_pages``), so it
+    writes that partition's one file.
 
     Resume skips the partitions live in the current snapshot
-    (:func:`ice_done_partitions`). When every partition is live the run
-    builds no plan and starts no Spark job: it commits an empty snapshot
-    carrying its (zero) lineage.
+    (:func:`ice_done_partitions`). It first raises ``ValueError`` when a
+    live partition was written under another id rule or partition count
+    (or records no rule). When every partition is live the run builds no
+    plan and starts no Spark job: it commits an empty snapshot carrying
+    its (zero) lineage.
     """
     table_dir = os.path.join(out_dir, "extracted_ice")
     try:
@@ -202,6 +224,7 @@ def run_with_lineage_ice(
             table_dir, partition_col="partition_id", stat_cols=["url", "doc_bytes"]
         )
 
+    _refuse_other_partitioning(table, num_partitions)
     done = ice_done_partitions(table)
     started_at = datetime.now(timezone.utc)  # before the data write
     if set(range(num_partitions)) <= set(done):
@@ -210,24 +233,12 @@ def run_with_lineage_ice(
         extracted = run_extraction(
             pages, num_partitions=num_partitions, done_partitions=done
         )
-        entries, rows, summary = stage_lineage(
-            spark,
-            table,
-            # re-cluster by the LOGICAL id so the overwrite writes one file
-            # set per partition_id (extraction tasks are physically spread
-            # by the raw url hash for balance — see extract.salted_pages).
-            # Rows here are blob-free (html was projected away in the
-            # kernel), so this exchange moves ~10% of the input bytes; a
-            # write-stage exchange keyed on P distinct values is
-            # birthday-lumpy, which is acceptable for pure IO tasks but
-            # must never sit in front of the extraction kernel.
-            extracted.repartition(num_partitions, F.col("partition_id")),
-            run_id,
-        )
+        entries, rows, summary = stage_lineage(spark, table, extracted, run_id)
     run = {
         "started_at": started_at.isoformat(),
         "finished_at": datetime.now(timezone.utc).isoformat(),
         "partitions_total": num_partitions,
+        "partition_id_rule": PARTITION_ID_RULE,
     }
     by_partition = {
         str(r["partition_id"]): {**r.asDict(), **run, "status": STATUS_SUCCEEDED}

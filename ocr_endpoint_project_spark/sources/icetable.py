@@ -693,8 +693,8 @@ class IceTable:
         partition value between writes): a matching old row living in an
         UNtouched partition is invisible to the rewrite and would
         survive as a duplicate.  The extraction sink's natural key
-        ``url`` -> ``partition_id = pmod(xxhash64(url), P)`` has this
-        property by construction.
+        ``url`` -> ``partition_id = pmod(hash(xxhash64(url)), P)`` has
+        this property by construction, for a fixed P.
         """
         meta = self.metadata()
         pcol = meta["partition_col"]

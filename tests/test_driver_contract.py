@@ -49,3 +49,18 @@ def test_pinned_ann_queries_under_materialize_dir(spark, tmp_path, monkeypatch):
     failed = check(["ann_recall_at_k", "ann_tuning_table"], sf_dir=SF_SMALL, spark=spark)
     assert not failed, f"oracle mismatches: {failed}"
     assert len(list((tmp_path / "ivf_assigned").iterdir())) >= 2
+
+
+def test_icetable_queries_build_in_own_dirs(spark):
+    """Each build of an icetable query writes its table into a fresh
+    directory, so a second build (another gate, the same scale factor)
+    never deletes the files a first build's frame still reads."""
+    from ocr_endpoint_project_spark.operators.extraction import (
+        q_ice_changelog,
+        q_ice_source_read,
+    )
+
+    for q in (q_ice_changelog, q_ice_source_read):
+        first = q(spark, SF_SMALL)
+        second = q(spark, SF_SMALL)
+        assert first.count() == second.count() > 0

@@ -4,6 +4,9 @@ structured-parse stage."""
 
 from __future__ import annotations
 
+import os
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -50,19 +53,46 @@ def test_failure_rows_become_rows_not_exceptions(spark, pages):
     assert extracted.count() == N_CORPUS
 
 
-def test_salted_partitioning_spreads_skewed_host(spark, pages):
-    """~30% of urls share one host; url-hash partitioning must still be
-    near-uniform (north_rule: salting defeats host-level skew)."""
-    df = salted_pages(pages, num_partitions=8)
-    sizes = (
+def _skewed_host_urls(spark, n: int = 7000):
+    """A url-only frame where 30% of the urls share one host."""
+    i = F.col("id")
+    host = F.when(i % 10 < 3, F.lit("skewed-host.example")).otherwise(
+        F.concat(F.lit("h"), (i % 97).cast("string"), F.lit(".example"))
+    )
+    return spark.range(n).select(
+        F.concat(F.lit("https://"), host, F.lit("/doc/"), i.cast("string")).alias("url")
+    )
+
+
+def _skewed_rows_per_task(df) -> list[int]:
+    """Rows of the skewed host held by each of the 8 tasks of ``df``."""
+    counts = dict(
         df.filter(F.col("url").contains("skewed-host"))
-        .groupBy("partition_id")
+        .groupBy(F.spark_partition_id().alias("task"))
         .count()
         .collect()
     )
-    assert len(sizes) >= 6, "skewed host rows should spread across partitions"
-    counts = [r["count"] for r in sizes]
-    assert max(counts) <= 4 * max(1, min(counts)) + 4
+    return [counts.get(t, 0) for t in range(8)]
+
+
+def _balanced(counts: list[int]) -> bool:
+    mean = sum(counts) / len(counts)
+    return all(0.75 * mean <= c <= 1.25 * mean for c in counts)
+
+
+def test_salted_partitioning_spreads_skewed_host(spark):
+    """2,100 of 7,000 urls share one host; the salted exchange must still
+    give every task 0.75-1.25x the mean of that host's rows (north_rule:
+    salting defeats host-level skew), and each task holds exactly the
+    logical partition it is numbered by. An exchange keyed on the host
+    fails the same check."""
+    urls = _skewed_host_urls(spark)
+    df = salted_pages(urls, 8)
+    assert df.filter(F.col("partition_id") != F.spark_partition_id()).count() == 0
+    counts = _skewed_rows_per_task(df)
+    assert sum(counts) == 2100 and _balanced(counts), counts
+    by_host = urls.repartition(8, F.parse_url("url", F.lit("HOST")))
+    assert not _balanced(_skewed_rows_per_task(by_host))
 
 
 def test_partition_id_is_data_derived(spark, pages):
@@ -243,13 +273,13 @@ def test_sink_spark_job_counts(spark, tmp_path):
     zero-doc snapshot."""
     # uncached, so no run pays for materializing an input cache
     pages = corpus_pages(spark, n=N_CORPUS, seed=42)
-    # two shuffle-map jobs and the write job, then the lineage collect's
-    # map and result jobs
+    # the salted exchange's shuffle-map job and the write job, then the
+    # lineage collect's map and result jobs
     _, fresh = _spark_jobs(
         spark, "sink_fresh",
         lambda: run_with_lineage_ice(spark, pages, str(tmp_path / "fresh"), num_partitions=8),
     )
-    assert fresh == 5
+    assert fresh == 4
 
     out = str(tmp_path / "job")
     half = (
@@ -263,7 +293,7 @@ def test_sink_spark_job_counts(spark, tmp_path):
         lambda: run_with_lineage_ice(spark, pages, out, run_id="B", num_partitions=8),
     )
     assert r["resumed_partitions_skipped"] == 4
-    assert resumed == 5
+    assert resumed == 4
 
     r, rerun = _spark_jobs(
         spark, "sink_rerun",
@@ -274,6 +304,74 @@ def test_sink_spark_job_counts(spark, tmp_path):
     s = IceTable.load(r["table_dir"]).snapshots()[-1]["summary"]
     assert s["run_id"] == "C" and s["partitions_total"] == 8
     assert s["lineage"]["doc_count"] == 0 and s["replaced_partitions"] == []
+
+
+def _table_files(table: IceTable) -> list[str]:
+    """Every file under the table's directory: data, staging and metadata."""
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(table.table_dir) for f in fs)
+
+
+def _assert_resume_refused(spark, pages, out: str, num_partitions: int, n_rows: int):
+    """A resume of ``out`` at ``num_partitions`` raises before it stages
+    or commits anything."""
+    table = IceTable.load(out + "/extracted_ice")
+    files = _table_files(table)
+    with pytest.raises(ValueError, match="new table"):
+        run_with_lineage_ice(spark, pages, out, run_id="B", num_partitions=num_partitions)
+    assert _table_files(table) == files
+    assert table.scan(spark).count() == n_rows
+
+
+def test_resume_refuses_other_partition_count(spark, tmp_path):
+    """Ids assigned under another partition count name other urls: a
+    finished 80-doc table written at P=8 and resumed at P=16 must be
+    refused, not topped up with duplicates."""
+    pages = corpus_pages(spark, n=80, seed=42).cache()
+    out = str(tmp_path / "job")
+    run_with_lineage_ice(spark, pages, out, run_id="A", num_partitions=8)
+    _assert_resume_refused(spark, pages, out, 16, 80)
+    # the same partition count still resumes everything away
+    r = run_with_lineage_ice(spark, pages, out, run_id="C", num_partitions=8)
+    assert r["resumed_partitions_skipped"] == 8
+    pages.unpersist()
+
+
+def test_resume_refuses_table_without_id_rule(spark, tmp_path):
+    """A table whose entries record no id rule (written before the rule
+    was recorded) is refused the same way, at its own partition count."""
+    pages = corpus_pages(spark, n=40, seed=7).cache()
+    src = IceTable.load(
+        run_with_lineage_ice(spark, pages, str(tmp_path / "src"), num_partitions=8)["table_dir"]
+    )
+    lineage = {e["partition"]: e["lineage"] for e in src.plan_files()}
+    out = str(tmp_path / "job")
+    old = IceTable.create(out + "/extracted_ice", partition_col="partition_id")
+    entries = old.stage_overwrite(src.scan(spark))
+    for e in entries:
+        e["lineage"] = {
+            k: v for k, v in lineage[e["partition"]].items() if k != "partition_id_rule"
+        }
+    old.commit_overwrite(entries)
+    _assert_resume_refused(spark, pages, out, 8, 40)
+    pages.unpersist()
+
+
+def test_commit_plan_has_one_exchange(spark, tmp_path, monkeypatch):
+    """The frame the sink stages is the salted extraction with no second
+    shuffle: each task holds one partition_id, so the write needs none."""
+    staged = []
+    stage = IceTable.stage_overwrite
+
+    def _capture(self, df):
+        staged.append(df)
+        return stage(self, df)
+
+    monkeypatch.setattr(IceTable, "stage_overwrite", _capture)
+    pages = corpus_pages(spark, n=40, seed=11)
+    run_with_lineage_ice(spark, pages, str(tmp_path / "job"), num_partitions=8)
+    (df,) = staged
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
 
 
 def test_canonicalize_url_separator_correct(spark):
